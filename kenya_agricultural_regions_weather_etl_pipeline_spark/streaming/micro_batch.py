@@ -16,12 +16,17 @@ watermark — memory-bounded regardless of stream length; shuffle is the
 usual keyed exchange per micro-batch. On a real cluster the same code
 reads a directory of thousands of files with ``maxFilesPerTrigger``
 pacing the backlog.
+
+Every runner here drives the shared lifecycle in ``runner.py``: its
+conf window, one-file-per-batch arrivals, the drain and the head of
+its version-chained state.
 """
 
 from __future__ import annotations
 
 import os
 import tempfile
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -37,20 +42,19 @@ from ..functions.jvmframes import empty_frame as _empty_frame
 from ..functions.jvmframes import values_frame as _values_frame
 from ..functions.weather import round_half_up
 from ..sources.tables import events_ts_unit, raw_ts_to_micros_sql
+from .runner import (
+    conf_scope,
+    drain,
+    latest_version,
+    list_dir_names,
+    read_arrivals,
+    stage_arrivals,
+    stream_confs,
+)
 
 
-def _lifecycle_mark(label: str, t0: float) -> None:
-    """ST11_DEBUG=1 phase-timing probe for the st11 micro-batch loop
-    (stderr only, no-op otherwise) — the instrumentation behind the
-    VERDICT r3 #6 overhead hunt; kept for future tuning sessions."""
-    if os.environ.get("ST11_DEBUG"):
-        import sys
-        import time
-
-        print(
-            f"[st11] {label}: {time.perf_counter() - t0:.2f}s",
-            file=sys.stderr,
-        )
+# in-batch writes that replace only the partitions they touch
+_DYNAMIC_OVERWRITE = {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
 
 # Raw on-disk schema of the driver-generated events table: ``ts`` is
 # read as int64 whatever the physical parquet timestamp unit is
@@ -66,14 +70,6 @@ EVENTS_RAW_SCHEMA = StructType(
         StructField("props", StringType()),
     ]
 )
-
-_SINK_N = [0]
-
-
-def _unique_sink(prefix: str) -> str:
-    _SINK_N[0] += 1
-    return f"{prefix}_{os.getpid()}_{_SINK_N[0]}"
-
 
 def read_events_stream(
     spark: SparkSession,
@@ -187,8 +183,8 @@ def run_session_windows(
     """Execute the streaming session-window agg to completion (st3)."""
     stream = read_events_stream(spark, sf_dir)
     agg = session_windows(stream, gap=gap)
-    _, out = _run_to_memory(agg, "complete", "st3")
-    return out
+    with stream_confs(spark, 8, aqe=True):
+        return drain(agg, mode="complete")
 
 
 def dedup_within_watermark(
@@ -243,122 +239,8 @@ def run_keyed_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Execute the custom stateful operator to completion (st4)."""
     stream = read_events_stream(spark, sf_dir)
     totals = keyed_running_totals(stream.select("user_id", "value"))
-    _, out = _run_to_memory(totals, "append", "st4")
-    return out
-
-
-def _run_to_memory(
-    df: DataFrame, mode: str, prefix: str, parts: int | None = None
-) -> tuple[str, DataFrame]:
-    """availableNow → memory sink, unique query name, await, return table.
-
-    Stateful streaming operators create one state-store instance per
-    shuffle partition PER BATCH; on the local harness 32 near-empty
-    state partitions cost more in task/state-store overhead than the
-    data (~2.7× wall-clock on st7). The number of state partitions is
-    fixed at first checkpoint, so set it at query start and restore
-    after. On a real cluster this knob is sized to state volume /
-    executor count, not left at the session default, so pinning it
-    here mirrors production practice rather than diverging from it.
-    ``parts`` lets a caller size the state partitioning to its OWN
-    measured backlog volume (st13's formula) instead of the default 8.
-    """
-    name = _unique_sink(prefix)
-    spark = df.sparkSession
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    with tempfile.TemporaryDirectory() as ckpt:
-        try:
-            spark.conf.set(
-                "spark.sql.shuffle.partitions", str(parts if parts else 8)
-            )
-            q = (
-                df.writeStream.format("memory")
-                .queryName(name)
-                .outputMode(mode)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    # materialize off the memory sink and drop it: repeated streaming
-    # runs in one session must not accumulate sink tables/state
-    out = spark.table(name).localCheckpoint(eager=True)
-    spark.catalog.dropTempView(name)
-    return name, out
-
-
-def _stage_bucketed_files(
-    df: DataFrame,
-    src: str,
-    n: int,
-    bucket,
-    t_base: float,
-    t_step: float,
-    fmt: str = "json",
-) -> None:
-    """Stage a backlog as one arrival file per batch in ONE partitioned
-    write job (r10): ``bucket`` is an int Column in [0, n) assigning
-    each row its batch; files land as ``src/batch_k.<fmt>`` with
-    ascending mtimes ``t_base + k*t_step`` (FileStreamSource replays by
-    mtime). The previous idiom — n sequential filter+coalesce(1) write
-    jobs — paid one scheduled Spark job plus one full input scan PER
-    BATCH for the same bytes. An empty json bucket still produces a
-    (zero-row) file so the micro-batch count never depends on id
-    density; parquet cannot express a zero-byte file, so an empty
-    parquet bucket is simply absent (one fewer micro-batch — identical
-    drained state either way)."""
-    import shutil
-
-    stage = src + "__stage"
-    (
-        df.withColumn("_b", bucket.cast("int"))
-        .repartition(n, "_b")
-        .write.partitionBy("_b")
-        .format(fmt)
-        .save(stage)
-    )
-    for k in range(n):
-        dst = os.path.join(src, f"batch_{k}.{fmt}")
-        bdir = os.path.join(stage, f"_b={k}")
-        part = None
-        if os.path.isdir(bdir):
-            part = next(
-                (p for p in os.listdir(bdir) if p.startswith("part-")),
-                None,
-            )
-        if part is not None:
-            shutil.move(os.path.join(bdir, part), dst)
-        elif fmt == "json":
-            open(dst, "w").close()  # empty bucket -> zero-row batch
-        else:
-            continue
-        os.utime(dst, (t_base + t_step * k, t_base + t_step * k))
-    shutil.rmtree(stage, ignore_errors=True)
-
-
-def _list_dir_names(spark: SparkSession, path: str) -> list[str]:
-    """Immediate child names of a STATE-STORE directory (bounded
-    metadata: one listing of one directory).
-
-    Local paths — this harness's tempdir stores — take one
-    ``os.listdir``; any non-local scheme goes through the Hadoop
-    FileSystem API, so the same call works when the store lives on
-    object storage at 100 TB (VERDICT r10 #5: query paths must not
-    assume the state store shares the driver's local filesystem).
-    Returns [] for a missing directory on either path."""
-    if os.path.isdir(path):
-        return os.listdir(path)
-    try:
-        jvm = spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        if not fs.exists(hpath):
-            return []
-        return [s.getPath().getName() for s in fs.listStatus(hpath)]
-    except Exception:
-        return []
+    with stream_confs(spark, 8, aqe=True):
+        return drain(totals, mode="append")
 
 
 def _fanned(df: DataFrame, spark: SparkSession) -> DataFrame:
@@ -393,7 +275,7 @@ def _stage_id_feed(
     emit zero-row json files, so the micro-batch count never depends
     on id density."""
     cuts = [b * mx // n_batches for b in range(n_batches)] + [mx]
-    _stage_bucketed_files(
+    stage_arrivals(
         feed, src, n_batches, _range_bucket(id_col, cuts), t_base, t_step
     )
 
@@ -423,8 +305,8 @@ def run_windowed_counts(
     """Execute the micro-batch windowed agg to completion (st1)."""
     stream = read_events_stream(spark, sf_dir)
     agg = windowed_event_counts(stream, window=window)
-    _, out = _run_to_memory(agg, "complete", "st1")
-    return out
+    with stream_confs(spark, 8, aqe=True):
+        return drain(agg, mode="complete")
 
 
 def run_stream_dedup(
@@ -440,8 +322,8 @@ def run_stream_dedup(
     which a one-file backlog never has."""
     stream = read_events_stream(spark, sf_dir)
     deduped = dedup_within_watermark(stream, keys).select(*keys)
-    _, out = _run_to_memory(deduped, "append", "st2")
-    return out
+    with stream_confs(spark, 8, aqe=True):
+        return drain(deduped, mode="append")
 
 
 def foreach_batch_upsert(
@@ -492,22 +374,8 @@ def foreach_batch_upsert(
         )
         merged.write.mode("overwrite").parquet(data_path)
 
-    spark = stream.sparkSession
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    with tempfile.TemporaryDirectory() as ckpt:
-        try:
-            # same local state-partition sizing rationale as _run_to_memory
-            spark.conf.set("spark.sql.shuffle.partitions", "8")
-            q = (
-                stream.writeStream.foreachBatch(_merge)
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    with stream_confs(stream.sparkSession, 8, aqe=True):
+        drain(stream, _merge)
 
 
 def run_foreach_batch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -561,8 +429,8 @@ def run_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_events"),
         round_half_up(F.sum("value"), 4).alias("sum_value"),
     )
-    _, out = _run_to_memory(agg, "complete", "st5")
-    return out
+    with stream_confs(spark, 8, aqe=True):
+        return drain(agg, mode="complete")
 
 
 def click_purchase_join(clicks_src: DataFrame, purchases_src: DataFrame) -> DataFrame:
@@ -617,8 +485,8 @@ def run_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = click_purchase_join(
         read_events_stream(spark, sf_dir), read_events_stream(spark, sf_dir)
     )
-    _, out = _run_to_memory(joined, "append", "st7")
-    return out
+    with stream_confs(spark, 8, aqe=True):
+        return drain(joined, mode="append")
 
 
 def left_outer_attribution(
@@ -796,12 +664,8 @@ def run_left_outer_attribution(
         )
 
         def one_side() -> DataFrame:
-            return (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", "1")
-                .option("pathGlobFilter", "*.parquet")
-                .parquet(src)
-                .withColumn("ts", F.timestamp_micros(F.col("t_us")))
+            return read_arrivals(spark, src, schema, "parquet").withColumn(
+                "ts", F.timestamp_micros(F.col("t_us"))
             )
 
         joined = left_outer_attribution(one_side(), one_side())
@@ -825,7 +689,8 @@ def run_left_outer_attribution(
         )
         sess_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
         parts = max(2, min(sess_parts, -(-backlog_bytes // (64 << 20))))
-        _, out = _run_to_memory(joined, "append", "st13", parts=parts)
+        with stream_confs(spark, parts, aqe=True):
+            out = drain(joined, mode="append")
         out = out.filter(F.col("user_id") >= 0)
     finally:
         shutil.rmtree(src, ignore_errors=True)
@@ -937,38 +802,11 @@ def run_cdc_apply_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(state, f"v{batch_id}")
         )
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        # AQE off in-stream: bounded per-batch stages (family
-        # discipline r11 — AQE stage-materialization jobs are pure
-        # per-batch scheduling latency on these bounded plans)
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        with tempfile.TemporaryDirectory() as ckpt:
-            q = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", "1")
-                .option("pathGlobFilter", "*.json")
-                .json(src_dir)
-                .writeStream.foreachBatch(one_batch)
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+    with stream_confs(spark, 8, aqe=False):
+        drain(read_arrivals(spark, src_dir, schema, "json"), one_batch)
 
-    versions = sorted(
-        int(d[1:])
-        for d in _list_dir_names(spark, state)
-        if d.startswith("v") and d[1:].isdigit()
-    )
     final = spark.read.parquet(
-        os.path.join(state, f"v{versions[-1]}")
+        latest_version(spark, state)
     ).localCheckpoint(eager=True)
     shutil.rmtree(workdir, ignore_errors=True)
     return final
@@ -1014,15 +852,12 @@ def run_vector_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 4 deterministic arrival batches (vec_id mod 4), one parquet file
     # each, mtime-ordered (same FileStreamSource discipline as st16)
     t0 = int(_time.time()) - 3600
-    _stage_bucketed_files(
+    stage_arrivals(
         emb, src_dir, 4, F.col("vec_id") % 4, t0, 1, fmt="parquet"
     )
 
     def one_batch(batch: DataFrame, batch_id: int) -> None:
-        sp = batch.sparkSession
-        prev_mode = sp.conf.get("spark.sql.sources.partitionOverwriteMode")
-        try:
-            sp.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        with conf_scope(batch.sparkSession, _DYNAMIC_OVERWRITE):
             (
                 _ivf_assign(batch, cent, "vec_id", "embedding")
                 .withColumn("ingest_batch", F.lit(batch_id))
@@ -1030,33 +865,9 @@ def run_vector_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .partitionBy("ingest_batch", "cell")
                 .parquet(index)
             )
-        finally:
-            sp.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        # AQE off in-stream: bounded per-batch stages (family
-        # discipline r11 — AQE stage-materialization jobs are pure
-        # per-batch scheduling latency on these bounded plans)
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        with tempfile.TemporaryDirectory() as ckpt:
-            q = (
-                spark.readStream.schema(emb.schema)
-                .option("maxFilesPerTrigger", "1")
-                .option("pathGlobFilter", "*.parquet")
-                .parquet(src_dir)
-                .writeStream.foreachBatch(one_batch)
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+    with stream_confs(spark, 8, aqe=False):
+        drain(read_arrivals(spark, src_dir, emb.schema, "parquet"), one_batch)
 
     queries = emb.filter(F.col("vec_id") < 8).withColumnRenamed(
         "vec_id", "query_id"
@@ -1141,7 +952,7 @@ def run_knn_graph_ingest(
     # (bounded |batch|, batch COUNT growing with the corpus — the
     # per-arrival axis SURVEY §9 argues); the graded query keeps the
     # default 4, and the upsert is arrival-order-free either way.
-    _stage_bucketed_files(
+    stage_arrivals(
         emb,
         src_dir,
         n_batches,
@@ -1224,38 +1035,11 @@ def run_knn_graph_ingest(
             probes_delta=probes_delta,
         ).write.mode("overwrite").parquet(os.path.join(graph_dir, f"v{batch_id}"))
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        # bounded per-batch stages (|delta| × cell-occupancy): AQE
-        # re-planning is pure latency here (f6c665a, the family
-        # discipline st24/st37/st38 already follow)
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        with tempfile.TemporaryDirectory() as ckpt:
-            q = (
-                spark.readStream.schema(emb.schema)
-                .option("maxFilesPerTrigger", "1")
-                .option("pathGlobFilter", "*.parquet")
-                .parquet(src_dir)
-                .writeStream.foreachBatch(one_batch)
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+    with stream_confs(spark, 8, aqe=False):
+        drain(read_arrivals(spark, src_dir, emb.schema, "parquet"), one_batch)
 
-    head = max(
-        int(d[1:])
-        for d in _list_dir_names(spark, graph_dir)
-        if d.startswith("v")
-    )
     out = spark.read.parquet(
-        os.path.join(graph_dir, f"v{head}")
+        latest_version(spark, graph_dir)
     ).localCheckpoint(eager=True)
     shutil.rmtree(workdir, ignore_errors=True)
     return out
@@ -1311,7 +1095,7 @@ def run_vector_serve_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 8 queries arrive in 4 mtime-ordered batches of 2 (vec_id mod 4)
     queries = emb.filter(F.col("vec_id") < 8)
     t0 = int(_time.time()) - 3600
-    _stage_bucketed_files(
+    stage_arrivals(
         queries, src_dir, 4, F.col("vec_id") % 4, t0, 1, fmt="parquet"
     )
 
@@ -1331,9 +1115,7 @@ def run_vector_serve_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("cell").isin(cells))
             .select("vec_id", "cvec", F.col("cell").cast("long").alias("cell"))
         )
-        prev_mode = sp.conf.get("spark.sql.sources.partitionOverwriteMode")
-        try:
-            sp.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        with conf_scope(sp, _DYNAMIC_OVERWRITE):
             (
                 _ivf_rerank(layout, probes, k=10)
                 .withColumn("serve_batch", F.lit(batch_id))
@@ -1341,33 +1123,11 @@ def run_vector_serve_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .partitionBy("serve_batch")
                 .parquet(results)
             )
-        finally:
-            sp.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        # AQE off in-stream: bounded per-batch stages (family
-        # discipline r11 — AQE stage-materialization jobs are pure
-        # per-batch scheduling latency on these bounded plans)
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        with tempfile.TemporaryDirectory() as ckpt:
-            q = (
-                spark.readStream.schema(queries.schema)
-                .option("maxFilesPerTrigger", "1")
-                .option("pathGlobFilter", "*.parquet")
-                .parquet(src_dir)
-                .writeStream.foreachBatch(one_batch)
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+    with stream_confs(spark, 8, aqe=False):
+        drain(
+            read_arrivals(spark, src_dir, queries.schema, "parquet"), one_batch
+        )
 
     out = (
         spark.read.parquet(results)
@@ -1441,14 +1201,12 @@ def run_graph_serve_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # memory instead of re-scanning the embeddings parquet 4×
     queries = emb.filter(F.col("vec_id") < 8).localCheckpoint(eager=True)
     t0 = int(_time.time()) - 3600
-    _stage_bucketed_files(
+    stage_arrivals(
         queries, src_dir, 4, F.col("vec_id") % 4, t0, 1, fmt="parquet"
     )
 
     def one_batch(qbatch: DataFrame, batch_id: int) -> None:
         sp = qbatch.sparkSession
-        if os.environ.get("ST24_DEBUG"):
-            print(f"[st24] batch {batch_id}: {qbatch.count()} queries")
         qs = qbatch.withColumnRenamed("vec_id", "query_id")
         # bounded driver-side metadata: the batch's entry cells only
         cells = [
@@ -1465,7 +1223,7 @@ def run_graph_serve_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         # embeddings) has NO directory — reading it would raise
         # PATH_NOT_FOUND, so keep only cells that materialized (one
         # FS-API listing of the store root, not n local isdir probes).
-        have = set(_list_dir_names(sp, assign_dir))
+        have = set(list_dir_names(sp, assign_dir))
         cell_dirs = [
             os.path.join(assign_dir, f"cell={c}")
             for c in cells
@@ -1500,12 +1258,7 @@ def run_graph_serve_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         # necessarily `sp`, so set dynamic overwrite THERE or each
         # batch wipes the prior serve_batch partitions (st22 never hit
         # this: its whole lineage lives in the batch session)
-        wsess = out.sparkSession
-        prev_mode = wsess.conf.get("spark.sql.sources.partitionOverwriteMode")
-        try:
-            wsess.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", "dynamic"
-            )
+        with conf_scope(out.sparkSession, _DYNAMIC_OVERWRITE):
             (
                 # one file per serve batch (answers are Q·k ≈ 20 rows;
                 # 8 shuffle-partition files per batch just multiply
@@ -1516,39 +1269,15 @@ def run_graph_serve_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .partitionBy("serve_batch")
                 .parquet(results)
             )
-        finally:
-            wsess.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", prev_mode
-            )
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try:
-        # every frame inside a serve batch is ≤ Q·beam·k rows — 2
-        # shuffle partitions (not 8) cuts task-launch count per hop
-        # stage; a production deployment sizes this to its query-batch
-        # volume, and AQE (kept ON there) coalesces it automatically.
-        spark.conf.set("spark.sql.shuffle.partitions", "2")
-        # here AQE's per-stage re-planning is pure scheduling latency
-        # (the st35/f6c665a measurement): every serve stage is
-        # bounded-small, there are no corpus-sized jobs in the loop.
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        with tempfile.TemporaryDirectory() as ckpt:
-            q = (
-                spark.readStream.schema(queries.schema)
-                .option("maxFilesPerTrigger", "1")
-                .option("pathGlobFilter", "*.parquet")
-                .parquet(src_dir)
-                .writeStream.foreachBatch(one_batch)
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+    # every frame inside a serve batch is ≤ Q·beam·k rows — 2 shuffle
+    # partitions (not 8) cuts task-launch count per hop stage; a
+    # production deployment sizes this to its query-batch volume, and
+    # AQE (kept ON there) coalesces it automatically
+    with stream_confs(spark, 2, aqe=False):
+        drain(
+            read_arrivals(spark, src_dir, queries.schema, "parquet"), one_batch
+        )
 
     out = (
         spark.read.parquet(results)
@@ -1634,32 +1363,11 @@ def run_export_manifest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(state, f"v{batch_id}")
         )
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        with tempfile.TemporaryDirectory() as ckpt:
-            q = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", "1")
-                .option("pathGlobFilter", "*.json")
-                .json(src_dir)
-                .writeStream.foreachBatch(one_batch)
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    with stream_confs(spark, 8, aqe=True):
+        drain(read_arrivals(spark, src_dir, schema, "json"), one_batch)
 
-    versions = sorted(
-        int(d[1:])
-        for d in _list_dir_names(spark, state)
-        if d.startswith("v") and d[1:].isdigit()
-    )
     out = (
-        spark.read.parquet(os.path.join(state, f"v{versions[-1]}"))
+        spark.read.parquet(latest_version(spark, state))
         .select(
             "shard",
             "n_docs",
@@ -1743,32 +1451,11 @@ def run_bpe_stats_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(state, f"v{batch_id}")
         )
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        with tempfile.TemporaryDirectory() as ckpt:
-            q = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", "1")
-                .option("pathGlobFilter", "*.json")
-                .json(src_dir)
-                .writeStream.foreachBatch(one_batch)
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    with stream_confs(spark, 8, aqe=True):
+        drain(read_arrivals(spark, src_dir, schema, "json"), one_batch)
 
-    versions = sorted(
-        int(d[1:])
-        for d in _list_dir_names(spark, state)
-        if d.startswith("v") and d[1:].isdigit()
-    )
     out = (
-        spark.read.parquet(os.path.join(state, f"v{versions[-1]}"))
+        spark.read.parquet(latest_version(spark, state))
         .orderBy(F.col("pair_count").desc(), F.col("pair").asc())
         .limit(50)
         .localCheckpoint(eager=True)
@@ -1818,15 +1505,12 @@ def run_model_score_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = os.path.join(workdir, "flags")
     os.makedirs(src_dir)
     t0 = int(_time.time()) - 3600
-    _stage_bucketed_files(
+    stage_arrivals(
         ev, src_dir, 4, F.col("event_id") % 4, t0, 1, fmt="parquet"
     )
 
     def one_batch(batch: DataFrame, batch_id: int) -> None:
-        sp = batch.sparkSession
-        prev_mode = sp.conf.get("spark.sql.sources.partitionOverwriteMode")
-        try:
-            sp.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        with conf_scope(batch.sparkSession, _DYNAMIC_OVERWRITE):
             (
                 base_cols(batch)
                 .join(F.broadcast(profile), ["event_type", "hod"])
@@ -1846,27 +1530,9 @@ def run_model_score_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .partitionBy("ingest_batch")
                 .parquet(out)
             )
-        finally:
-            sp.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        with tempfile.TemporaryDirectory() as ckpt:
-            q = (
-                spark.readStream.schema(ev.schema)
-                .option("maxFilesPerTrigger", "1")
-                .option("pathGlobFilter", "*.parquet")
-                .parquet(src_dir)
-                .writeStream.foreachBatch(one_batch)
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    with stream_confs(spark, 8, aqe=True):
+        drain(read_arrivals(spark, src_dir, ev.schema, "parquet"), one_batch)
 
     final = (
         spark.read.parquet(out)
@@ -1948,31 +1614,10 @@ def run_corpus_telemetry(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(state, f"v{batch_id}")
         )
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        with tempfile.TemporaryDirectory() as ckpt:
-            q = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", "1")
-                .option("pathGlobFilter", "*.json")
-                .json(src_dir)
-                .writeStream.foreachBatch(one_batch)
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    with stream_confs(spark, 8, aqe=True):
+        drain(read_arrivals(spark, src_dir, schema, "json"), one_batch)
 
-    versions = sorted(
-        int(d[1:])
-        for d in _list_dir_names(spark, state)
-        if d.startswith("v") and d[1:].isdigit()
-    )
-    final = spark.read.parquet(os.path.join(state, f"v{versions[-1]}"))
+    final = spark.read.parquet(latest_version(spark, state))
     out = final.select(
         "lang",
         "n_docs",
@@ -2019,19 +1664,18 @@ def run_jsonl_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         # 4 files → 4 micro-batches under maxFilesPerTrigger=1
         write_jsonl(docs.repartition(4), src)
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .option("pathGlobFilter", "*.json")
-            .json(src)
+        agg = (
+            read_arrivals(spark, src, schema, "json")
+            .groupBy("lang")
+            .agg(
+                F.count(F.lit(1)).alias("n_docs"),
+                F.sum("n_chars").cast("bigint").alias("sum_chars"),
+            )
         )
-        agg = stream.groupBy("lang").agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_chars").cast("bigint").alias("sum_chars"),
-        )
-        # _run_to_memory checkpoints eagerly, so the source dir can be
-        # deleted as soon as it returns
-        _, out = _run_to_memory(agg, "complete", "st8")
+        # drain materializes the sink, so the source dir can be deleted
+        # as soon as it returns
+        with stream_confs(spark, 8, aqe=True):
+            out = drain(agg, mode="complete")
     finally:
         shutil.rmtree(src, ignore_errors=True)
     return out
@@ -2046,8 +1690,8 @@ def run_sliding_counts(
     watermark, not the stream length."""
     stream = read_events_stream(spark, sf_dir)
     agg = windowed_event_counts(stream, window=window, slide=slide)
-    _, out = _run_to_memory(agg, "complete", "st9")
-    return out
+    with stream_confs(spark, 8, aqe=True):
+        return drain(agg, mode="complete")
 
 
 def run_weather_stream(
@@ -2086,37 +1730,32 @@ def run_weather_stream(
             F.max("temperature").alias("max_temp"),
         )
     )
-    name = _unique_sink("st10")
+    name = f"st10_{uuid.uuid4().hex}"
     expected = days * 15
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    with tempfile.TemporaryDirectory() as ckpt:
-        try:
-            spark.conf.set("spark.sql.shuffle.partitions", "8")
-            q = (
-                agg.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("complete")
-                .option("checkpointLocation", ckpt)
-                .trigger(processingTime="0 seconds")
-                .start()
+    with stream_confs(spark, 8, aqe=True), tempfile.TemporaryDirectory() as ckpt:
+        q = (
+            agg.writeStream.format("memory")
+            .queryName(name)
+            .outputMode("complete")
+            .option("checkpointLocation", ckpt)
+            .trigger(processingTime="0 seconds")
+            .start()
+        )
+        deadline = time.monotonic() + timeout_s
+        while time.monotonic() < deadline:
+            got = (
+                spark.table(name)
+                .agg(F.sum("n_docs").alias("n"))
+                .collect()[0]["n"]
             )
-            deadline = time.monotonic() + timeout_s
-            while time.monotonic() < deadline:
-                got = (
-                    spark.table(name)
-                    .agg(F.sum("n_docs").alias("n"))
-                    .collect()[0]["n"]
-                )
-                if got == expected:
-                    break
-                time.sleep(0.25)
-            else:  # pragma: no cover
-                q.stop()
-                raise TimeoutError(f"st10 backlog not drained: {got}/{expected}")
+            if got == expected:
+                break
+            time.sleep(0.25)
+        else:  # pragma: no cover
             q.stop()
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+            raise TimeoutError(f"st10 backlog not drained: {got}/{expected}")
+        q.stop()
+        q.awaitTermination()
     out = spark.table(name).localCheckpoint(eager=True)
     spark.catalog.dropTempView(name)
     return out
@@ -2161,11 +1800,6 @@ def run_weather_stream_etl(
     target = tempfile.mkdtemp(prefix="st11_weather_")
 
     def one_day(raw_batch: DataFrame, batch_id: int) -> None:
-        _t0 = time.perf_counter()
-
-        def _mark(label):
-            _lifecycle_mark(f"b{batch_id} {label}", _t0)
-
         from pyspark.sql import Observation
 
         # E1 quarantine, streaming edition: malformed docs land in a
@@ -2187,14 +1821,12 @@ def run_weather_stream_etl(
             .observe(obs, F.sum(F.col("_corrupt").cast("int")).alias("n_corrupt"))
             .localCheckpoint(eager=True)
         )
-        _mark("parse-checkpoint")
         flat = flatten(parsed).join(
             F.broadcast(regions_df(raw_batch.sparkSession)), "region", "left"
         )
         day = transform(flat).select(*WEATHER_LOAD_COLUMNS).localCheckpoint(
             eager=True
         )
-        _mark("checkpoint")
         if (obs.get["n_corrupt"] or 0) > 0:
             parsed.filter(F.col("_corrupt")).select(
                 "region", "raw"
@@ -2205,9 +1837,7 @@ def run_weather_stream_etl(
         # dynamic overwrite rewrites exactly those day partitions —
         # historical days are never re-read or re-written (run_batch
         # applies the same pruning)
-        _mark("quarantine")
         touched = collect_touched_partitions(day, "date")
-        _mark("touched")
         from pyspark.errors import AnalysisException
 
         try:
@@ -2226,7 +1856,6 @@ def run_weather_stream_etl(
             # replace the touched partitions with just this day's rows.
             merged = day
         write_merged_partitioned(merged, target, ["date"])
-        _mark("merged-write")
 
     stream = (
         spark.readStream.format("weather_stream")
@@ -2237,57 +1866,42 @@ def run_weather_stream_etl(
         .option("edge_cases", "true")
         .load()
     )
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    with tempfile.TemporaryDirectory() as ckpt:
-        try:
-            spark.conf.set("spark.sql.shuffle.partitions", "8")
-            # AQE off in-stream: bounded per-batch stages (family
-            # discipline r11 — AQE stage-materialization jobs are pure
-            # per-batch scheduling latency on these bounded plans)
-            spark.conf.set("spark.sql.adaptive.enabled", "false")
-            _tq = time.perf_counter()
-            q = (
-                stream.writeStream.foreachBatch(one_day)
-                .option("checkpointLocation", ckpt)
-                .trigger(processingTime="0 seconds")
-                .start()
-            )
-            _lifecycle_mark("start", _tq)
-            # drained = the source's offset has reached the backlog end
-            # (day == days; the reader clamps there), meaning the last
-            # DATA batch has committed — see the loop comment below.
-            import re as _re
+    with stream_confs(spark, 8, aqe=False), tempfile.TemporaryDirectory() as ckpt:
+        q = (
+            stream.writeStream.foreachBatch(one_day)
+            .option("checkpointLocation", ckpt)
+            .trigger(processingTime="0 seconds")
+            .start()
+        )
+        # drained = the source's offset has reached the backlog end
+        # (day == days; the reader clamps there), meaning the last
+        # DATA batch has committed — see the loop comment below.
+        import re as _re
 
-            deadline = time.monotonic() + timeout_s
-            while time.monotonic() < deadline:
-                lp = q.lastProgress
-                if lp:
-                    # endOffset may arrive as a dict, JSON, or Python
-                    # repr ({'day': 3}) — extract the day count textually.
-                    # A progress event is emitted AFTER its trigger
-                    # commits, and each trigger advances exactly one day
-                    # (latestOffset clamps at ``days``), so the FIRST
-                    # event with endOffset == days IS the final data
-                    # batch's commit. Do not additionally wait for an
-                    # empty numInputRows==0 trigger: when idle the
-                    # engine only emits progress every
-                    # noDataProgressEventInterval (10 s default), which
-                    # stalled the drain ~10 s per run (VERDICT r3 #6).
-                    m = _re.search(r"\d+", str(lp["sources"][0]["endOffset"]))
-                    if m is not None and int(m.group()) == days:
-                        break
-                time.sleep(0.05)
-            else:  # pragma: no cover
-                q.stop()
-                raise TimeoutError("st11 backlog not drained")
-            _lifecycle_mark("drained", _tq)
+        deadline = time.monotonic() + timeout_s
+        while time.monotonic() < deadline:
+            lp = q.lastProgress
+            if lp:
+                # endOffset may arrive as a dict, JSON, or Python
+                # repr ({'day': 3}) — extract the day count textually.
+                # A progress event is emitted AFTER its trigger
+                # commits, and each trigger advances exactly one day
+                # (latestOffset clamps at ``days``), so the FIRST
+                # event with endOffset == days IS the final data
+                # batch's commit. Do not additionally wait for an
+                # empty numInputRows==0 trigger: when idle the
+                # engine only emits progress every
+                # noDataProgressEventInterval (10 s default), which
+                # stalled the drain ~10 s per run (VERDICT r3 #6).
+                m = _re.search(r"\d+", str(lp["sources"][0]["endOffset"]))
+                if m is not None and int(m.group()) == days:
+                    break
+            time.sleep(0.05)
+        else:  # pragma: no cover
             q.stop()
-            q.awaitTermination()
-            _lifecycle_mark("stopped", _tq)
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-            spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+            raise TimeoutError("st11 backlog not drained")
+        q.stop()
+        q.awaitTermination()
     return spark.read.parquet(target).select(*WEATHER_LOAD_COLUMNS)
 
 
@@ -2309,7 +1923,7 @@ def run_dedup_ingest(
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     src = tempfile.mkdtemp(prefix="st12_src_")
-    _stage_bucketed_files(
+    stage_arrivals(
         docs,
         src,
         n_files,
@@ -2318,13 +1932,9 @@ def run_dedup_ingest(
         1,
         fmt="parquet",
     )
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
     enriched = (
-        stream.withColumn("fp", F.md5(F.col("text")))
+        read_arrivals(spark, src, docs.schema, "parquet")
+        .withColumn("fp", F.md5(F.col("text")))
         # keep-MIN doc_id expressed through the keep-max merge helper
         .withColumn("neg_id", -F.col("doc_id"))
     )
@@ -2394,7 +2004,6 @@ def run_streaming_near_dedup(
     oracle, and the batch-equivalence pytest pins the incremental
     decomposition on top of it.
     """
-    import glob as _glob
     import shutil
     import time as _time
 
@@ -2585,7 +2194,7 @@ def run_streaming_near_dedup(
         # metadata (<= n_bucket_prefixes values).
         batch_pfx = [
             int(d[5:])
-            for d in _list_dir_names(sess, os.path.join(bdir, "art=b"))
+            for d in list_dir_names(sess, os.path.join(bdir, "art=b"))
             if d.startswith("bpfx=")
         ]
         old_buckets = (
@@ -2640,7 +2249,7 @@ def run_streaming_near_dedup(
         # parquet transport (r10): each batch re-reads only its own
         # file, but the TEXT payload dominates the bytes — columnar
         # decode beats re-parsing JSON lines of full documents
-        _stage_bucketed_files(
+        stage_arrivals(
             docs,
             src,
             n_batches,
@@ -2649,30 +2258,11 @@ def run_streaming_near_dedup(
             60,
             fmt="parquet",
         )
-        stream = (
-            spark.readStream.schema("doc_id long, source string, text string")
-            .option("maxFilesPerTrigger", "1")
-            .option("pathGlobFilter", "*.parquet")
-            .parquet(src)
+        stream = read_arrivals(
+            spark, src, "doc_id long, source string, text string", "parquet"
         )
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-        with tempfile.TemporaryDirectory() as ckpt:
-            try:
-                spark.conf.set("spark.sql.shuffle.partitions", "8")
-                # per-batch stages are bounded (|batch| x collisions);
-                # AQE re-planning is pure latency here (f6c665a)
-                spark.conf.set("spark.sql.adaptive.enabled", "false")
-                q = (
-                    stream.writeStream.foreachBatch(one_batch)
-                    .option("checkpointLocation", ckpt)
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                q.awaitTermination()
-            finally:
-                spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-                spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+        with stream_confs(spark, 8, aqe=False):
+            drain(stream, one_batch)
         out = (
             spark.read.parquet(survivors_path)
             .groupBy("source")
@@ -2723,7 +2313,6 @@ def run_containment_ingest(
     a thin (doc_id, n_sh) size store, both batch_id-keyed
     overwrite-on-replay (exactly-once); per batch the candidate join
     touches |batch| × shingle-collision rows, never the corpus."""
-    import glob as _glob
     import shutil
     import time as _time
 
@@ -2751,10 +2340,9 @@ def run_containment_ingest(
     # is pure scheduling latency (measured 10.2 → 8.5 s at sf0.1,
     # identical job count). A production deployment keeps AQE on for
     # the one genuinely corpus-sized job — the offline stop-shingle
-    # agg — by running the deploy as its own job; both confs are
-    # restored in the shared finally below.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    # agg — by running the deploy as its own job. The conf window
+    # below covers the deploy, the staging write, the stream and the
+    # drained read.
     hot = None
 
     def featurize(batch: DataFrame) -> DataFrame:
@@ -2846,72 +2434,59 @@ def run_containment_ingest(
         # store would be write-only dead state.)
 
     try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        # offline deploy: the frozen stop-shingle list (bounded:
-        # shingles shared by > max_shingle_df docs — tiny by Zipf,
-        # broadcastable)
-        all_sh = docs.select(
-            "doc_id",
-            F.explode(
-                F.array_distinct(shingles(F.col("text"), k_shingle))
-            ).alias("sh"),
-        )
-        (
-            all_sh.groupBy("sh")
-            .agg(F.count(F.lit(1)).alias("df_"))
-            .filter(F.col("df_") > max_shingle_df)
-            .select("sh")
-            .coalesce(1)
-            .write.parquet(hot_path)
-        )
-        hot = spark.read.parquet(hot_path).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        mx = docs.agg(F.max("doc_id")).first()[0] + 1
-        now = _time.time()
-        # ONE partitioned write stages all n_batches backlog files
-        # (4 separate filter+coalesce writes = 4 commit cycles over the
-        # same scan); the boundary CASE reproduces the exact integer
-        # doc_id ranges, and the move loop assigns ascending mtimes so
-        # maxFilesPerTrigger=1 replays arrival order.
-        bounds = [k * mx // n_batches for k in range(n_batches + 1)]
-        _stage_bucketed_files(
-            docs,
-            src,
-            n_batches,
-            _range_bucket("doc_id", bounds),
-            now - 600,
-            60,
-            fmt="parquet",
-        )
-        stream = (
-            spark.readStream.schema("doc_id long, source string, text string")
-            .option("maxFilesPerTrigger", "1")
-            .option("pathGlobFilter", "*.parquet")
-            .parquet(src)
-        )
-        with tempfile.TemporaryDirectory() as ckpt:
-            q = (
-                stream.writeStream.foreachBatch(one_batch)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
+        with stream_confs(spark, 8, aqe=False):
+            # offline deploy: the frozen stop-shingle list (bounded:
+            # shingles shared by > max_shingle_df docs — tiny by Zipf,
+            # broadcastable)
+            all_sh = docs.select(
+                "doc_id",
+                F.explode(
+                    F.array_distinct(shingles(F.col("text"), k_shingle))
+                ).alias("sh"),
             )
-            q.awaitTermination()
-        out = (
-            spark.read.parquet(survivors_path)
-            .groupBy("source")
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_survivors"),
-                F.min("doc_id").alias("min_id"),
-                F.max("doc_id").alias("max_id"),
+            (
+                all_sh.groupBy("sh")
+                .agg(F.count(F.lit(1)).alias("df_"))
+                .filter(F.col("df_") > max_shingle_df)
+                .select("sh")
+                .coalesce(1)
+                .write.parquet(hot_path)
             )
-            .localCheckpoint(eager=True)
-        )
+            hot = spark.read.parquet(hot_path).persist(
+                StorageLevel.MEMORY_AND_DISK
+            )
+            mx = docs.agg(F.max("doc_id")).first()[0] + 1
+            now = _time.time()
+            # ONE partitioned write stages all n_batches backlog files
+            # (4 separate filter+coalesce writes = 4 commit cycles over the
+            # same scan); the boundary CASE reproduces the exact integer
+            # doc_id ranges, and the move loop assigns ascending mtimes so
+            # maxFilesPerTrigger=1 replays arrival order.
+            bounds = [k * mx // n_batches for k in range(n_batches + 1)]
+            stage_arrivals(
+                docs,
+                src,
+                n_batches,
+                _range_bucket("doc_id", bounds),
+                now - 600,
+                60,
+                fmt="parquet",
+            )
+            stream = read_arrivals(
+                spark, src, "doc_id long, source string, text string", "parquet"
+            )
+            drain(stream, one_batch)
+            out = (
+                spark.read.parquet(survivors_path)
+                .groupBy("source")
+                .agg(
+                    F.count(F.lit(1)).cast("bigint").alias("n_survivors"),
+                    F.min("doc_id").alias("min_id"),
+                    F.max("doc_id").alias("max_id"),
+                )
+                .localCheckpoint(eager=True)
+            )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
         if hot is not None:
             hot.unpersist()
         docs.unpersist()
@@ -2955,7 +2530,6 @@ def run_streaming_semantic_dedup(
     layout), verifies candidates with the exact 6dp-rounded cosine, and
     appends the whole batch to state. Candidate work per batch is
     |batch| × cell-collision rows, never corpus²."""
-    import glob as _glob
     import math as _math
     import shutil
     import time as _time
@@ -3071,7 +2645,7 @@ def run_streaming_semantic_dedup(
         mx = mx0 + 1
         now = _time.time()
         cuts = [b * mx // n_batches for b in range(n_batches)] + [mx]
-        _stage_bucketed_files(
+        stage_arrivals(
             emb,
             src,
             n_batches,
@@ -3080,30 +2654,8 @@ def run_streaming_semantic_dedup(
             60,
             fmt="parquet",
         )
-        stream = (
-            spark.readStream.schema(emb.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-        with tempfile.TemporaryDirectory() as ckpt:
-            try:
-                spark.conf.set("spark.sql.shuffle.partitions", "8")
-                # AQE off in-stream: bounded per-batch stages (family
-                # discipline r11 — AQE stage-materialization jobs are pure
-                # per-batch scheduling latency on these bounded plans)
-                spark.conf.set("spark.sql.adaptive.enabled", "false")
-                q = (
-                    stream.writeStream.foreachBatch(one_batch)
-                    .option("checkpointLocation", ckpt)
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                q.awaitTermination()
-            finally:
-                spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-                spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+        with stream_confs(spark, 8, aqe=False):
+            drain(read_arrivals(spark, src, emb.schema, "parquet"), one_batch)
         out = (
             spark.read.parquet(survivors_path)
             .groupBy("label")
@@ -3144,7 +2696,6 @@ def run_streaming_heavy_hitters(
     answer is EXACT and shares a17's GROUP BY/HAVING oracle. The
     vocabulary long tail never enters streaming state OR an Exchange.
     """
-    import glob as _glob
     import shutil
 
     from ..functions.text import tokens as _tokens
@@ -3157,7 +2708,7 @@ def run_streaming_heavy_hitters(
     try:
         import time as _time
 
-        _stage_bucketed_files(
+        stage_arrivals(
             docs,
             src,
             n_files,
@@ -3193,25 +2744,9 @@ def run_streaming_heavy_hitters(
                 os.path.join(state, f"v{batch_id}")
             )
 
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        with tempfile.TemporaryDirectory() as ckpt:
-            q = (
-                stream.writeStream.foreachBatch(one_batch)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        drain(read_arrivals(spark, src, docs.schema, "parquet"), one_batch)
 
-        final = max(
-            _glob.glob(os.path.join(state, "v*")),
-            key=lambda p: int(os.path.basename(p)[1:]),
-        )
-        cands = spark.read.parquet(final).select("tok")
+        cands = spark.read.parquet(latest_version(spark, state)).select("tok")
         all_toks = spark.read.parquet(src).select(
             F.explode(_tokens(F.lower(F.col("text")))).alias("tok")
         )
@@ -3269,7 +2804,6 @@ def run_contract_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract on the full table: st26 shares a20's DuckDB oracle
     verbatim (same expectation/target/violations/passed rows).
     """
-    import glob as _glob
     import shutil
     from datetime import datetime, timezone
 
@@ -3390,41 +2924,15 @@ def run_contract_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(state, "keys", f"v{batch_id}")
         )
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        # AQE off in-stream: bounded per-batch stages (family
-        # discipline r11 — AQE stage-materialization jobs are pure
-        # per-batch scheduling latency on these bounded plans)
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        with tempfile.TemporaryDirectory() as ckpt:
-            q = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", "1")
-                .option("pathGlobFilter", "*.json")
-                .json(src_dir)
-                .writeStream.foreachBatch(one_batch)
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+    with stream_confs(spark, 8, aqe=False):
+        drain(read_arrivals(spark, src_dir, schema, "json"), one_batch)
 
-    final_c = max(
-        _glob.glob(os.path.join(state, "counters", "v*")),
-        key=lambda p: int(os.path.basename(p)[1:]),
+    counters = spark.read.parquet(
+        latest_version(spark, os.path.join(state, "counters"))
     )
-    final_k = max(
-        _glob.glob(os.path.join(state, "keys", "v*")),
-        key=lambda p: int(os.path.basename(p)[1:]),
-    )
-    counters = spark.read.parquet(final_c)
-    nd = spark.read.parquet(final_k).agg(
+    nd = spark.read.parquet(
+        latest_version(spark, os.path.join(state, "keys"))
+    ).agg(
         F.count(F.lit(1)).cast("long").alias("_nd_key")
     )
     rows = F.array(
@@ -3491,7 +2999,6 @@ def run_drift_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantized term fold) runs ONCE at drain; over the finite backlog
     the scoreboard equals batch a21 — one oracle for the monitor and
     its streaming deployment."""
-    import glob as _glob
     import shutil
 
     from ..operators.quality import drift_binned_counts, psi_scoreboard
@@ -3532,36 +3039,10 @@ def run_drift_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(state, f"v{batch_id}")
         )
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        # AQE off in-stream: bounded per-batch stages (family
-        # discipline r11 — AQE stage-materialization jobs are pure
-        # per-batch scheduling latency on these bounded plans)
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        with tempfile.TemporaryDirectory() as ckpt:
-            q = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", "1")
-                .option("pathGlobFilter", "*.json")
-                .json(src_dir)
-                .writeStream.foreachBatch(one_batch)
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+    with stream_confs(spark, 8, aqe=False):
+        drain(read_arrivals(spark, src_dir, schema, "json"), one_batch)
 
-    final = max(
-        _glob.glob(os.path.join(state, "v*")),
-        key=lambda p: int(os.path.basename(p)[1:]),
-    )
-    counts = spark.read.parquet(final)
+    counts = spark.read.parquet(latest_version(spark, state))
     out = psi_scoreboard(spark, counts).localCheckpoint(eager=True)
     shutil.rmtree(workdir, ignore_errors=True)
     return out
@@ -3617,7 +3098,7 @@ def run_token_budget_stream(
     # backlog contract: past mtimes, strictly increasing)
     t0 = int(_time.time()) - 3600
     bounds = [(max_id + 1) * k // n_files for k in range(n_files + 1)]
-    _stage_bucketed_files(
+    stage_arrivals(
         scored, src_dir, n_files, _range_bucket("doc_id", bounds), t0, 1
     )
 
@@ -3658,24 +3139,8 @@ def run_token_budget_stream(
             os.path.join(state, f"v{batch_id}")
         )
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        with tempfile.TemporaryDirectory() as ckpt:
-            q = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", "1")
-                .option("pathGlobFilter", "*.json")
-                .json(src_dir)
-                .writeStream.foreachBatch(one_batch)
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    with stream_confs(spark, 8, aqe=True):
+        drain(read_arrivals(spark, src_dir, schema, "json"), one_batch)
 
     out_schema = StructType(
         [
@@ -3688,7 +3153,7 @@ def run_token_budget_stream(
         spark.read.schema(out_schema).parquet(
             os.path.join(admitted_dir, p)
         )
-        for p in sorted(_list_dir_names(spark, admitted_dir))
+        for p in sorted(list_dir_names(spark, admitted_dir))
     ]
     out = reduce(lambda a, b: a.unionByName(b), frames).localCheckpoint(
         eager=True
@@ -3736,7 +3201,7 @@ def run_nb_deploy_stream(
 
     import time as _time
 
-    _stage_bucketed_files(
+    stage_arrivals(
         docs.select("doc_id", "text"),
         src_dir,
         n_files,
@@ -3762,30 +3227,8 @@ def run_nb_deploy_stream(
             os.path.join(scored_dir, f"b{batch_id}")
         )
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        # AQE off in-stream: bounded per-batch stages (family
-        # discipline r11 — AQE stage-materialization jobs are pure
-        # per-batch scheduling latency on these bounded plans)
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        with tempfile.TemporaryDirectory() as ckpt:
-            q = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", "1")
-                .option("pathGlobFilter", "*.parquet")
-                .parquet(src_dir)
-                .writeStream.foreachBatch(one_batch)
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+    with stream_confs(spark, 8, aqe=False):
+        drain(read_arrivals(spark, src_dir, schema, "parquet"), one_batch)
 
     out_schema = StructType(
         [
@@ -3798,7 +3241,7 @@ def run_nb_deploy_stream(
 
     frames = [
         spark.read.schema(out_schema).parquet(os.path.join(scored_dir, p))
-        for p in sorted(_list_dir_names(spark, scored_dir))
+        for p in sorted(list_dir_names(spark, scored_dir))
     ]
     merged = reduce(lambda a, b: a.unionByName(b), frames)
     out = merged.select(
@@ -3851,7 +3294,7 @@ def run_span_index_stream(
 
     import time as _time
 
-    _stage_bucketed_files(
+    stage_arrivals(
         docs,
         src_dir,
         n_files,
@@ -3888,37 +3331,10 @@ def run_span_index_stream(
             os.path.join(state, f"v{batch_id}")
         )
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        # AQE off in-stream: bounded per-batch stages (family
-        # discipline r11 — AQE stage-materialization jobs are pure
-        # per-batch scheduling latency on these bounded plans)
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        with tempfile.TemporaryDirectory() as ckpt:
-            q = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", "1")
-                .option("pathGlobFilter", "*.parquet")
-                .parquet(src_dir)
-                .writeStream.foreachBatch(one_batch)
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+    with stream_confs(spark, 8, aqe=False):
+        drain(read_arrivals(spark, src_dir, schema, "parquet"), one_batch)
 
-    versions = sorted(
-        int(d[1:])
-        for d in _list_dir_names(spark, state)
-        if d.startswith("v") and d[1:].isdigit()
-    )
-    gstate = spark.read.parquet(os.path.join(state, f"v{versions[-1]}"))
+    gstate = spark.read.parquet(latest_version(spark, state))
     dup = gstate.filter(F.col("ndocs") >= 2).select("gram")
     hit_schema = StructType(
         [
@@ -3929,13 +3345,142 @@ def run_span_index_stream(
     )
     frames = [
         spark.read.schema(hit_schema).parquet(os.path.join(hits_dir, p))
-        for p in sorted(_list_dir_names(spark, hits_dir))
+        for p in sorted(list_dir_names(spark, hits_dir))
     ]
     all_hits = reduce(lambda a, b: a.unionByName(b), frames)
     hits = all_hits.join(dup, "gram").select("doc_id", "start")
     out = span_coverage(docs, hits, n=8).localCheckpoint(eager=True)
     shutil.rmtree(workdir, ignore_errors=True)
     return out
+
+
+def _locate_targets(hist: list, mass: str) -> tuple[int, dict]:
+    """Locate the p50/p90/p99 targets ``ceil(p·total)`` on a
+    bucket-sorted histogram whose per-bucket mass column is ``mass``.
+
+    Returns ``(total, {(p, target): (bucket, mass before bucket)})``.
+    ``ceil`` runs on the same IEEE double product the batch engine
+    expression computes, so the targets are identical to a22/a23's."""
+    import math
+
+    total = sum(r[mass] for r in hist)
+    located = {}
+    for p in (0.5, 0.9, 0.99):
+        target = max(1, math.ceil(p * total))
+        pre = 0
+        for r in hist:
+            if pre < target <= pre + r[mass]:
+                located[(p, target)] = (r["bucket"], pre)
+                break
+            pre += r[mass]
+        else:
+            raise RuntimeError(
+                f"quantile p={p}: target {target} is beyond the "
+                f"histogram total {total}"
+            )
+    return total, located
+
+
+def _located_rows(spark: SparkSession, store: str, located: dict) -> DataFrame:
+    """Rows of ONLY the located bucket directories: a direct-path read
+    under basePath never even LISTS the other buckets (pruning by
+    construction, stronger than relying on planner PartitionFilters
+    over a full store listing)."""
+    buckets = sorted({b for b, _ in located.values()})
+    return spark.read.option("basePath", store).parquet(
+        *[os.path.join(store, f"bucket={b}") for b in buckets]
+    )
+
+
+def _quantile_picks(spark: SparkSession, store: str, hist: list) -> list:
+    """st31's drain: exact p50/p90/p99 ``(p, rank_k, n_rows, value)``
+    rows of a bucket-partitioned store, given its per-bucket count
+    histogram (``bucket``, ``bn``). Every within-bucket rank pick runs
+    in ONE job. A store that disagrees with its histogram raises a
+    RuntimeError naming (p, target rank, bucket)."""
+    from pyspark.sql import Window
+
+    n_rows, located = _locate_targets(hist, "bn")
+    wd = Window.partitionBy("bucket").orderBy(
+        F.col("value").asc(), F.col("l_orderkey").asc(),
+        F.col("l_linenumber").asc(),
+    )
+    cond = None
+    for (p, k), (b, pre) in located.items():
+        c = (F.col("bucket") == b) & (F.col("rn") == k - pre)
+        cond = c if cond is None else (cond | c)
+    picked = {
+        (r["bucket"], r["rn"]): r["value"]
+        for r in _located_rows(spark, store, located)
+        .withColumn("rn", F.row_number().over(wd))
+        .filter(cond)
+        .select("bucket", "rn", "value")
+        .collect()
+    }
+    out_rows = []
+    for (p, k), (b, pre) in located.items():
+        if (b, k - pre) not in picked:
+            raise RuntimeError(
+                f"quantile p={p}: rank {k} not found in bucket {b} of "
+                f"{store} (store and histogram disagree)"
+            )
+        out_rows.append((p, k, n_rows, picked[(b, k - pre)]))
+    return out_rows
+
+
+def _weighted_quantile_picks(
+    spark: SparkSession, store: str, hist: list
+) -> list:
+    """st36's drain: exact weighted p50/p90/p99
+    ``(p, target_weight, total_weight, value)`` rows of a
+    bucket-partitioned store, given its per-bucket weight histogram
+    (``bucket``, ``bw``): the row whose running weight crosses the
+    target, ``cum_w ≥ W_p AND cum_w − w < W_p`` (a23's rule), every
+    crossing picked in ONE job. A store that disagrees with its
+    histogram raises a RuntimeError naming (p, target weight,
+    bucket)."""
+    from pyspark.sql import Window
+
+    w_total, located = _locate_targets(hist, "bw")
+    wd = (
+        Window.partitionBy("bucket")
+        .orderBy(
+            F.col("value").asc(),
+            F.col("l_orderkey").asc(),
+            F.col("l_linenumber").asc(),
+        )
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    cum = _located_rows(spark, store, located).withColumn(
+        "cum_in_bucket", F.sum("w").over(wd)
+    )
+    cond = None
+    for (p, wk), (b, pre) in located.items():
+        c = (
+            (F.col("bucket") == b)
+            & (F.lit(pre) + F.col("cum_in_bucket") >= wk)
+            & (F.lit(pre) + F.col("cum_in_bucket") - F.col("w") < wk)
+        )
+        cond = c if cond is None else (cond | c)
+    picked = cum.filter(cond).select(
+        "bucket", "cum_in_bucket", "w", "value"
+    ).collect()
+    out_rows = []
+    for (p, wk), (b, pre) in located.items():
+        hits = [
+            r["value"]
+            for r in picked
+            if r["bucket"] == b
+            and pre + r["cum_in_bucket"] >= wk
+            and pre + r["cum_in_bucket"] - r["w"] < wk
+        ]
+        if not hits:
+            raise RuntimeError(
+                f"weighted quantile p={p}: target weight {wk} not crossed "
+                f"in bucket {b} of {store} (store and histogram disagree)"
+            )
+        out_rows.append((p, wk, w_total, hits[0]))
+    return out_rows
 
 
 def run_quantile_stream(
@@ -3986,7 +3531,7 @@ def run_quantile_stream(
 
     import time as _time
 
-    _stage_bucketed_files(
+    stage_arrivals(
         li,
         src_dir,
         n_files,
@@ -4029,36 +3574,8 @@ def run_quantile_stream(
             os.path.join(state, f"v{batch_id}")
         )
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        # bounded per-batch stages: AQE's stage-materialization jobs
-        # are pure per-batch latency here (the stream-family
-        # discipline — ~2 extra scheduled jobs per batch measured)
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        with tempfile.TemporaryDirectory() as ckpt:
-            q = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", "1")
-                .parquet(src_dir)
-                .writeStream.foreachBatch(one_batch)
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-
-    versions = sorted(
-        int(d[1:])
-        for d in _list_dir_names(spark, state)
-        if d.startswith("v") and d[1:].isdigit()
-    )
-    from pyspark.sql import Window
+    with stream_confs(spark, 8, aqe=False):
+        drain(read_arrivals(spark, src_dir, schema, "parquet"), one_batch)
 
     # the standing histogram is O(value_range / width) rows regardless
     # of data volume — collect it ONCE and locate the target ranks in
@@ -4067,50 +3584,10 @@ def run_quantile_stream(
     # 3 filter-first probes, and the per-target rank picks below fold
     # into ONE job)
     hist = sorted(
-        spark.read.parquet(os.path.join(state, f"v{versions[-1]}")).collect(),
+        spark.read.parquet(latest_version(spark, state)).collect(),
         key=lambda r: r["bucket"],
     )
-    n_rows = sum(r["bn"] for r in hist)
-    # k = ceil(p·N) on the same IEEE double product a22's engine
-    # expression computes, so the picked ranks are identical
-    import math as _math
-
-    targets = [(p, max(1, _math.ceil(p * n_rows))) for p in (0.5, 0.9, 0.99)]
-    located = {}
-    for p, k in targets:
-        pre = 0
-        for r in hist:
-            if pre < k <= pre + r["bn"]:
-                located[(p, k)] = (r["bucket"], pre)
-                break
-            pre += r["bn"]
-    # read ONLY the located bucket directories: direct-path read under
-    # basePath never even LISTS the other buckets (pruning by
-    # construction, stronger than relying on planner PartitionFilters
-    # over a full store listing)
-    buckets = sorted({b for b, _ in located.values()})
-    rows = spark.read.option("basePath", store).parquet(
-        *[os.path.join(store, f"bucket={b}") for b in buckets]
-    )
-    wd = Window.partitionBy("bucket").orderBy(
-        F.col("value").asc(), F.col("l_orderkey").asc(),
-        F.col("l_linenumber").asc(),
-    )
-    cond = None
-    for (p, k), (b, pre) in located.items():
-        c = (F.col("bucket") == b) & (F.col("rn") == k - pre)
-        cond = c if cond is None else (cond | c)
-    picked = {
-        (r["bucket"], r["rn"]): r["value"]
-        for r in rows.withColumn("rn", F.row_number().over(wd))
-        .filter(cond)
-        .select("bucket", "rn", "value")
-        .collect()
-    }
-    out_rows = [
-        (p, k, n_rows, picked[(b, k - pre)])
-        for (p, k), (b, pre) in located.items()
-    ]
+    out_rows = _quantile_picks(spark, store, hist)
     # JVM VALUES result (no localCheckpoint needed: literal rows carry
     # no reference to the about-to-be-deleted workdir)
     out = _values_frame(
@@ -4163,7 +3640,7 @@ def run_weighted_quantile_stream(
 
     import time as _time
 
-    _stage_bucketed_files(
+    stage_arrivals(
         li,
         src_dir,
         n_files,
@@ -4204,94 +3681,17 @@ def run_weighted_quantile_stream(
             os.path.join(state, f"v{batch_id}")
         )
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        # AQE off in-stream: bounded per-batch stages (the st31 /
-        # stream-family discipline)
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        with tempfile.TemporaryDirectory() as ckpt:
-            q = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", "1")
-                .parquet(src_dir)
-                .writeStream.foreachBatch(one_batch)
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-
-    versions = sorted(
-        int(d[1:])
-        for d in _list_dir_names(spark, state)
-        if d.startswith("v") and d[1:].isdigit()
-    )
-    from pyspark.sql import Window
+    with stream_confs(spark, 8, aqe=False):
+        drain(read_arrivals(spark, src_dir, schema, "parquet"), one_batch)
 
     # O(range/width) histogram — collect once, locate the weight
     # targets in plain integer arithmetic, pick every crossing row in
     # ONE job (the st31 drain discipline; six driver jobs fold into two)
     hist = sorted(
-        spark.read.parquet(os.path.join(state, f"v{versions[-1]}")).collect(),
+        spark.read.parquet(latest_version(spark, state)).collect(),
         key=lambda r: r["bucket"],
     )
-    w_total = sum(r["bw"] for r in hist)
-    # W_p = ceil(p·W_total) on the same IEEE double product a23's
-    # engine expression computes, so the picked targets are identical
-    import math as _math
-
-    targets = [
-        (p, max(1, _math.ceil(p * w_total))) for p in (0.5, 0.9, 0.99)
-    ]
-    located = {}
-    for p, wk in targets:
-        pre = 0
-        for r in hist:
-            if pre < wk <= pre + r["bw"]:
-                located[(p, wk)] = (r["bucket"], pre)
-                break
-            pre += r["bw"]
-    buckets = sorted({b for b, _ in located.values()})
-    rows = spark.read.option("basePath", store).parquet(
-        *[os.path.join(store, f"bucket={b}") for b in buckets]
-    )
-    wd = (
-        Window.partitionBy("bucket")
-        .orderBy(
-            F.col("value").asc(),
-            F.col("l_orderkey").asc(),
-            F.col("l_linenumber").asc(),
-        )
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    cum = rows.withColumn("cum_in_bucket", F.sum("w").over(wd))
-    cond = None
-    for (p, wk), (b, pre) in located.items():
-        c = (
-            (F.col("bucket") == b)
-            & (F.lit(pre) + F.col("cum_in_bucket") >= wk)
-            & (F.lit(pre) + F.col("cum_in_bucket") - F.col("w") < wk)
-        )
-        cond = c if cond is None else (cond | c)
-    picked = cum.filter(cond).select(
-        "bucket", "cum_in_bucket", "w", "value"
-    ).collect()
-    out_rows = []
-    for (p, wk), (b, pre) in located.items():
-        v = next(
-            r["value"]
-            for r in picked
-            if r["bucket"] == b
-            and pre + r["cum_in_bucket"] >= wk
-            and pre + r["cum_in_bucket"] - r["w"] < wk
-        )
-        out_rows.append((p, wk, w_total, v))
+    out_rows = _weighted_quantile_picks(spark, store, hist)
     out = _values_frame(
         spark,
         out_rows,
@@ -4344,7 +3744,7 @@ def run_maxsim_serve_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 2 query bags (doc_id 0 and 1) arrive one per micro-batch,
     # mtime-ordered — a bag is scored atomically
     t0 = int(_time.time()) - 3600
-    _stage_bucketed_files(
+    stage_arrivals(
         vecs.filter(F.col("doc_id") < 2),
         src_dir,
         2,
@@ -4362,9 +3762,7 @@ def run_maxsim_serve_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("v").alias("qv"),
         )
         corpus = sp.read.parquet(store)
-        prev_mode = sp.conf.get("spark.sql.sources.partitionOverwriteMode")
-        try:
-            sp.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        with conf_scope(sp, _DYNAMIC_OVERWRITE):
             (
                 maxsim_topk(corpus, bag, k=5)
                 .withColumn("serve_batch", F.lit(batch_id))
@@ -4372,27 +3770,9 @@ def run_maxsim_serve_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .partitionBy("serve_batch")
                 .parquet(results)
             )
-        finally:
-            sp.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        with tempfile.TemporaryDirectory() as ckpt:
-            q = (
-                spark.readStream.schema(vecs.schema)
-                .option("maxFilesPerTrigger", "1")
-                .option("pathGlobFilter", "*.parquet")
-                .parquet(src_dir)
-                .writeStream.foreachBatch(one_batch)
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    with stream_confs(spark, 8, aqe=True):
+        drain(read_arrivals(spark, src_dir, vecs.schema, "parquet"), one_batch)
 
     out = (
         spark.read.parquet(results)
@@ -4446,7 +3826,7 @@ def run_late_data_audit(
     os.makedirs(src)
     t0 = int(_time.time()) - 3600
     mx_us = ev.agg(F.max("ts_us")).first()[0]
-    _stage_bucketed_files(ev, src, 3, F.col("event_id") % 3, t0, 1)
+    stage_arrivals(ev, src, 3, F.col("event_id") % 3, t0, 1)
     # two sentinel batches, driver-written: watermark advances at batch
     # END, so sentinel 2 is the batch sentinel 1's watermark flushes into
     for i, days in ((3, 365), (4, 366)):
@@ -4469,49 +3849,21 @@ def run_late_data_audit(
             StructField("ts_us", LongType()),
         ]
     )
-    name = f"st33_sink_{abs(hash(workdir)) % 10_000_000}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        # AQE off in-stream: bounded per-batch stages (family
-        # discipline r11 — AQE stage-materialization jobs are pure
-        # per-batch scheduling latency on these bounded plans)
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        with tempfile.TemporaryDirectory() as ckpt:
-            stream = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", "1")
-                .option("pathGlobFilter", "*.json")
-                .json(src)
-                .withColumn("ts", F.timestamp_micros(F.col("ts_us")))
-                .withWatermark("ts", delay)
-                .groupBy(F.window("ts", "1 day").alias("w"))
-                .agg(F.count(F.lit(1)).cast("long").alias("n_events"))
-            )
-            q = (
-                stream.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("append")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-    cutoff = F.timestamp_micros(F.lit(mx_us))
-    out = (
-        spark.table(name)
-        .filter(F.col("w.start") <= cutoff)  # drop sentinel windows
-        .select(
-            F.date_format("w.start", "yyyy-MM-dd").alias("window_day"),
-            "n_events",
-        )
-        .localCheckpoint(eager=True)
+    stream = (
+        read_arrivals(spark, src, schema, "json")
+        .withColumn("ts", F.timestamp_micros(F.col("ts_us")))
+        .withWatermark("ts", delay)
+        .groupBy(F.window("ts", "1 day").alias("w"))
+        .agg(F.count(F.lit(1)).cast("long").alias("n_events"))
     )
-    spark.catalog.dropTempView(name)
+    with stream_confs(spark, 8, aqe=False):
+        drained = drain(stream, mode="append")
+    cutoff = F.timestamp_micros(F.lit(mx_us))
+    # drop the sentinel windows from the rows drain materialized
+    out = drained.filter(F.col("w.start") <= cutoff).select(
+        F.date_format("w.start", "yyyy-MM-dd").alias("window_day"),
+        "n_events",
+    )
     shutil.rmtree(workdir, ignore_errors=True)
     return out
 
@@ -4577,31 +3929,10 @@ def run_unseen_mass_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(state, f"v{batch_id}")
         )
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        with tempfile.TemporaryDirectory() as ckpt:
-            q = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", "1")
-                .option("pathGlobFilter", "*.json")
-                .json(src_dir)
-                .writeStream.foreachBatch(one_batch)
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    with stream_confs(spark, 8, aqe=True):
+        drain(read_arrivals(spark, src_dir, schema, "json"), one_batch)
 
-    versions = sorted(
-        int(d[1:])
-        for d in _list_dir_names(spark, state)
-        if d.startswith("v") and d[1:].isdigit()
-    )
-    tc = spark.read.parquet(os.path.join(state, f"v{versions[-1]}"))
+    tc = spark.read.parquet(latest_version(spark, state))
     out = (
         tc.groupBy("source")
         .agg(
@@ -4715,7 +4046,7 @@ def run_bm25_index_ingest(
         cuts = [
             5 + b * (mx - 5) // n_batches for b in range(n_batches)
         ] + [mx]
-        _stage_bucketed_files(
+        stage_arrivals(
             corpus,
             src,
             n_batches,
@@ -4724,37 +4055,11 @@ def run_bm25_index_ingest(
             60,
             fmt="parquet",
         )
-        stream = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", "1")
-            .option("pathGlobFilter", "*.parquet")
-            .parquet(src)
-        )
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-        with tempfile.TemporaryDirectory() as ckpt:
-            try:
-                spark.conf.set("spark.sql.shuffle.partitions", "8")
-                # bounded per-batch stages: AQE re-planning is pure
-                # latency here (f6c665a)
-                spark.conf.set("spark.sql.adaptive.enabled", "false")
-                q = (
-                    stream.writeStream.foreachBatch(one_batch)
-                    .option("checkpointLocation", ckpt)
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                q.awaitTermination()
-            finally:
-                spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-                spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-        versions = sorted(
-            int(v[1:])
-            for v in _list_dir_names(spark, dict_dir)
-            if v.startswith("v") and v[1:].isdigit()
-        )
+        stream = read_arrivals(spark, src, "doc_id long, text string", "parquet")
+        with stream_confs(spark, 8, aqe=False):
+            drain(stream, one_batch)
         dfc = spark.read.parquet(
-            os.path.join(dict_dir, f"v{versions[-1]}")
+            latest_version(spark, dict_dir)
         )
         tf = spark.read.parquet(postings_path).select(
             "doc_id", "term", "tf"
@@ -4878,7 +4183,7 @@ def run_hybrid_serve_stream(
 
     queries = docs.filter(F.col("doc_id") < 5)
     now = _time.time()
-    _stage_bucketed_files(
+    stage_arrivals(
         queries,
         src,
         n_batches,
@@ -4907,14 +4212,7 @@ def run_hybrid_serve_stream(
             "query_id", "doc_id", "rank"
         )
         out = rrf_fuse(sparse, dense, k=10)
-        wsess = out.sparkSession
-        prev_mode = wsess.conf.get(
-            "spark.sql.sources.partitionOverwriteMode"
-        )
-        try:
-            wsess.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", "dynamic"
-            )
+        with conf_scope(out.sparkSession, _DYNAMIC_OVERWRITE):
             (
                 out.coalesce(1)
                 .withColumn("serve_batch", F.lit(batch_id))
@@ -4922,34 +4220,12 @@ def run_hybrid_serve_stream(
                 .partitionBy("serve_batch")
                 .parquet(results)
             )
-        finally:
-            wsess.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", prev_mode
-            )
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        # bounded per-batch stages (Q·20-row frames): AQE re-planning
-        # is pure latency here (f6c665a)
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        with tempfile.TemporaryDirectory() as ckpt:
-            q = (
-                spark.readStream.schema("doc_id long, text string")
-                .option("maxFilesPerTrigger", "1")
-                .option("pathGlobFilter", "*.json")
-                .json(src)
-                .writeStream.foreachBatch(one_batch)
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+    with stream_confs(spark, 4, aqe=False):
+        drain(
+            read_arrivals(spark, src, "doc_id long, text string", "json"),
+            one_batch,
+        )
 
     out = (
         spark.read.parquet(results)
@@ -5102,7 +4378,7 @@ def run_hybrid_serve_pruned(
 
     queries = docs.filter(F.col("doc_id") < 5)
     now = _time.time()
-    _stage_bucketed_files(
+    stage_arrivals(
         queries,
         src,
         n_batches,
@@ -5162,14 +4438,7 @@ def run_hybrid_serve_pruned(
             )
         )
         out = rrf_fuse(sparse, dense, k=10)
-        wsess = out.sparkSession
-        prev_mode = wsess.conf.get(
-            "spark.sql.sources.partitionOverwriteMode"
-        )
-        try:
-            wsess.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", "dynamic"
-            )
+        with conf_scope(out.sparkSession, _DYNAMIC_OVERWRITE):
             (
                 out.coalesce(1)
                 .withColumn("serve_batch", F.lit(batch_id))
@@ -5177,34 +4446,12 @@ def run_hybrid_serve_pruned(
                 .partitionBy("serve_batch")
                 .parquet(results)
             )
-        finally:
-            wsess.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", prev_mode
-            )
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        # bounded per-batch stages (Q·20-row frames): AQE re-planning
-        # is pure latency here (f6c665a)
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        with tempfile.TemporaryDirectory() as ckpt:
-            q = (
-                spark.readStream.schema("doc_id long, text string")
-                .option("maxFilesPerTrigger", "1")
-                .option("pathGlobFilter", "*.json")
-                .json(src)
-                .writeStream.foreachBatch(one_batch)
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+    with stream_confs(spark, 4, aqe=False):
+        drain(
+            read_arrivals(spark, src, "doc_id long, text string", "json"),
+            one_batch,
+        )
 
     out = (
         spark.read.parquet(results)
@@ -5257,8 +4504,6 @@ def run_erasure_request_stream(
     streaming deployment; equivalence across batchings pinned by
     pytest)."""
     import shutil
-
-    from pyspark.errors import AnalysisException
 
     from ..functions.text import fingerprint_md5
     from ..sources.tables import load_table
@@ -5349,36 +4594,11 @@ def run_erasure_request_stream(
             os.path.join(gstate_dir, f"v{batch_id + 1}")
         )
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        # bounded per-batch stages (request-sized frames): AQE
-        # re-planning is pure latency here (f6c665a)
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        with tempfile.TemporaryDirectory() as ckpt:
-            q = (
-                spark.readStream.schema("doc_id long")
-                .option("maxFilesPerTrigger", "1")
-                .option("pathGlobFilter", "*.json")
-                .json(src)
-                .writeStream.foreachBatch(one_batch)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+    with stream_confs(spark, 4, aqe=False):
+        drain(read_arrivals(spark, src, "doc_id long", "json"), one_batch)
 
-    versions = sorted(
-        int(v[1:])
-        for v in _list_dir_names(spark, gstate_dir)
-        if v.startswith("v") and v[1:].isdigit()
-    )
     final = spark.read.parquet(
-        os.path.join(gstate_dir, f"v{versions[-1]}")
+        latest_version(spark, gstate_dir)
     )
     out = (
         final.filter(F.col("n_deleted") > 0)
@@ -5501,34 +4721,9 @@ def run_index_erasure_stream(
             os.path.join(dict_dir, f"v{batch_id + 1}")
         )
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        # bounded per-batch stages (request-sized frames): AQE
-        # re-planning is pure latency here (f6c665a)
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        with tempfile.TemporaryDirectory() as ckpt:
-            q = (
-                spark.readStream.schema("doc_id long")
-                .option("maxFilesPerTrigger", "1")
-                .option("pathGlobFilter", "*.json")
-                .json(src)
-                .writeStream.foreachBatch(one_batch)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+    with stream_confs(spark, 4, aqe=False):
+        drain(read_arrivals(spark, src, "doc_id long", "json"), one_batch)
 
-    versions = sorted(
-        int(v[1:])
-        for v in _list_dir_names(spark, dict_dir)
-        if v.startswith("v") and v[1:].isdigit()
-    )
     ledger = (
         spark.read.parquet(ledger_path)
         .groupBy("term")
@@ -5543,7 +4738,7 @@ def run_index_erasure_stream(
         "term", F.col("df").alias("old_df")
     )
     vlast = spark.read.parquet(
-        os.path.join(dict_dir, f"v{versions[-1]}")
+        latest_version(spark, dict_dir)
     ).select("term", F.col("df").alias("new_df"))
     out = (
         ledger.join(v0, "term")
@@ -5619,7 +4814,6 @@ def run_cell_erasure_stream(
     ).coalesce(1).write.parquet(os.path.join(sizes_dir, "v0"))
 
     # ---- the request feed: deleted BAG doc ids in range files ------
-    import glob as _glob
     import time as _time
 
     feed = (
@@ -5678,34 +4872,9 @@ def run_cell_erasure_stream(
             os.path.join(sizes_dir, f"v{batch_id + 1}")
         )
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        # bounded per-batch stages (request-sized frames): AQE
-        # re-planning is pure latency here (f6c665a)
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        with tempfile.TemporaryDirectory() as ckpt:
-            q = (
-                spark.readStream.schema("doc_id long")
-                .option("maxFilesPerTrigger", "1")
-                .option("pathGlobFilter", "*.json")
-                .json(src)
-                .writeStream.foreachBatch(one_batch)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+    with stream_confs(spark, 4, aqe=False):
+        drain(read_arrivals(spark, src, "doc_id long", "json"), one_batch)
 
-    versions = sorted(
-        int(v[1:])
-        for v in _list_dir_names(spark, sizes_dir)
-        if v.startswith("v") and v[1:].isdigit()
-    )
     ledger = (
         spark.read.parquet(ledger_path)
         .groupBy("cell")
@@ -5715,7 +4884,7 @@ def run_cell_erasure_stream(
         "cell", F.col("members").alias("old_members")
     )
     vlast = spark.read.parquet(
-        os.path.join(sizes_dir, f"v{versions[-1]}")
+        latest_version(spark, sizes_dir)
     ).select("cell", F.col("members").alias("new_members"))
     out = (
         ledger.join(v0, "cell")
@@ -5770,7 +4939,6 @@ def run_graph_erasure_stream(
     needs_backfill = new_degree < k. Equals the batch x128 audit
     row-for-row (one oracle); x132 executes the backfill this flags.
     """
-    import glob as _glob
     import shutil
     import time as _time
 
@@ -5864,34 +5032,9 @@ def run_graph_erasure_stream(
             os.path.join(deg_dir, f"v{batch_id + 1}")
         )
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        # bounded per-batch stages (request-sized frames): AQE
-        # re-planning is pure latency here (f6c665a)
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        with tempfile.TemporaryDirectory() as ckpt:
-            q = (
-                spark.readStream.schema("doc_id long")
-                .option("maxFilesPerTrigger", "1")
-                .option("pathGlobFilter", "*.json")
-                .json(src)
-                .writeStream.foreachBatch(one_batch)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+    with stream_confs(spark, 4, aqe=False):
+        drain(read_arrivals(spark, src, "doc_id long", "json"), one_batch)
 
-    versions = sorted(
-        int(v[1:])
-        for v in _list_dir_names(spark, deg_dir)
-        if v.startswith("v") and v[1:].isdigit()
-    )
     ledger = (
         spark.read.parquet(ledger_path)
         .groupBy("src_id")
@@ -5901,7 +5044,7 @@ def run_graph_erasure_stream(
         "src_id", F.col("degree").alias("old_degree")
     )
     vlast = spark.read.parquet(
-        os.path.join(deg_dir, f"v{versions[-1]}")
+        latest_version(spark, deg_dir)
     ).select("src_id", F.col("degree").alias("new_degree"))
     out = (
         ledger.join(v0, "src_id")
@@ -6070,36 +5213,11 @@ def run_backfill_stream(
             os.path.join(fills_dir, f"v{batch_id + 1}")
         )
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        # bounded per-batch stages (touched-set-sized frames): AQE
-        # re-planning is pure latency here (f6c665a)
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        with tempfile.TemporaryDirectory() as ckpt:
-            q = (
-                spark.readStream.schema("doc_id long")
-                .option("maxFilesPerTrigger", "1")
-                .option("pathGlobFilter", "*.json")
-                .json(src)
-                .writeStream.foreachBatch(one_batch)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+    with stream_confs(spark, 4, aqe=False):
+        drain(read_arrivals(spark, src, "doc_id long", "json"), one_batch)
 
-    versions = sorted(
-        int(v[1:])
-        for v in _list_dir_names(spark, fills_dir)
-        if v.startswith("v") and v[1:].isdigit()
-    )
     out = (
-        spark.read.parquet(os.path.join(fills_dir, f"v{versions[-1]}"))
+        spark.read.parquet(latest_version(spark, fills_dir))
         .select("src_id", "new_nbr_id", "backfill_sim", "fill_rank")
         .localCheckpoint(eager=True)
     )
@@ -6194,7 +5312,7 @@ def run_media_dedup_ingest(
         cuts = [
             b * n_assets // n_batches for b in range(n_batches)
         ] + [n_assets]
-        _stage_bucketed_files(
+        stage_arrivals(
             media,
             src,
             n_batches,
@@ -6203,29 +5321,8 @@ def run_media_dedup_ingest(
             60,
             fmt="parquet",
         )
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-        with tempfile.TemporaryDirectory() as ckpt:
-            try:
-                spark.conf.set("spark.sql.shuffle.partitions", "4")
-                # bounded per-batch stages (|batch| hash rows): AQE
-                # re-planning is pure latency here (f6c665a)
-                spark.conf.set("spark.sql.adaptive.enabled", "false")
-                q = (
-                    spark.readStream.schema(media.schema)
-                    .option("maxFilesPerTrigger", "1")
-                    .option("pathGlobFilter", "*.parquet")
-                    .parquet(src)
-                    .writeStream.foreachBatch(one_batch)
-                    .outputMode("update")
-                    .option("checkpointLocation", ckpt)
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                q.awaitTermination()
-            finally:
-                spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-                spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+        with stream_confs(spark, 4, aqe=False):
+            drain(read_arrivals(spark, src, media.schema, "parquet"), one_batch)
         counts = (
             spark.read.parquet(counts_path)
             .groupBy("phash")
@@ -6358,7 +5455,7 @@ def run_mixed_media_dedup_ingest(
         cuts = [
             b * n_assets // n_batches for b in range(n_batches)
         ] + [n_assets]
-        _stage_bucketed_files(
+        stage_arrivals(
             media,
             src,
             n_batches,
@@ -6367,29 +5464,8 @@ def run_mixed_media_dedup_ingest(
             60,
             fmt="parquet",
         )
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-        with tempfile.TemporaryDirectory() as ckpt:
-            try:
-                spark.conf.set("spark.sql.shuffle.partitions", "4")
-                # bounded per-batch stages (|batch| fingerprint rows):
-                # AQE re-planning is pure latency here (f6c665a)
-                spark.conf.set("spark.sql.adaptive.enabled", "false")
-                q = (
-                    spark.readStream.schema(media.schema)
-                    .option("maxFilesPerTrigger", "1")
-                    .option("pathGlobFilter", "*.parquet")
-                    .parquet(src)
-                    .writeStream.foreachBatch(one_batch)
-                    .outputMode("update")
-                    .option("checkpointLocation", ckpt)
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                q.awaitTermination()
-            finally:
-                spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-                spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+        with stream_confs(spark, 4, aqe=False):
+            drain(read_arrivals(spark, src, media.schema, "parquet"), one_batch)
         counts = (
             spark.read.parquet(counts_path)
             .groupBy("media_type", "fp")
@@ -6463,7 +5539,7 @@ def run_decontamination_ingest(
     partials_path = os.path.join(workdir, "partials")
     os.makedirs(src_dir)
     t0 = int(_time.time()) - 3600
-    _stage_bucketed_files(
+    stage_arrivals(
         train.drop("slice"),
         src_dir,
         n_batches,
@@ -6493,39 +5569,15 @@ def run_decontamination_ingest(
             .parquet(partials_path)
         )
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        # AQE off in-stream: bounded per-batch stages (family
-        # discipline r11 — AQE stage-materialization jobs are pure
-        # per-batch scheduling latency on these bounded plans)
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        # dynamic overwrite set ONCE on the stream's parent session —
-        # micro-batch session clones inherit it (the st47 discipline)
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        )
-        with tempfile.TemporaryDirectory() as ckpt:
-            q = (
-                spark.readStream.schema(train.drop("slice").schema)
-                .option("maxFilesPerTrigger", "1")
-                .option("pathGlobFilter", "*.parquet")
-                .parquet(src_dir)
-                .writeStream.foreachBatch(one_batch)
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", prev_mode
-        )
+    stream = read_arrivals(
+        spark, src_dir, train.drop("slice").schema, "parquet"
+    )
+    # dynamic overwrite set ONCE on the stream's parent session —
+    # micro-batch session clones inherit it (the st47 discipline)
+    with stream_confs(spark, 8, aqe=False), conf_scope(
+        spark, _DYNAMIC_OVERWRITE
+    ):
+        drain(stream, one_batch)
 
     final = merge_decontam(
         spark.read.parquet(partials_path).drop("ingest_batch")
@@ -6593,7 +5645,7 @@ def run_preference_pair_stream(
     # ONE staging job: all n_batches arrival files written by a single
     # partitioned write (was n_batches sequential filter+coalesce jobs)
     t0 = int(_time.time()) - 3600
-    _stage_bucketed_files(
+    stage_arrivals(
         docs,
         src_dir,
         n_batches,
@@ -6636,9 +5688,9 @@ def run_preference_pair_stream(
 
         touched = [
             (unquote(ld[5:]), unquote(sd[7:]))
-            for ld in _list_dir_names(sess, bdir)
+            for ld in list_dir_names(sess, bdir)
             if ld.startswith("lang=")
-            for sd in _list_dir_names(sess, os.path.join(bdir, ld))
+            for sd in list_dir_names(sess, os.path.join(bdir, ld))
             if sd.startswith("source=")
         ]
         pred = None
@@ -6656,42 +5708,18 @@ def run_preference_pair_stream(
             "lang", "source"
         ).mode("overwrite").parquet(pairs_path)
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    prev_infer = spark.conf.get(
-        "spark.sql.sources.partitionColumnTypeInference.enabled"
-    )
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        # AQE off in-stream: bounded per-batch stages (family
-        # discipline r11 — AQE stage-materialization jobs are pure
-        # per-batch scheduling latency on these bounded plans)
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        )
-        # lang/source come back as PARTITION VALUES on every store
-        # read — pin them to string (ADVICE r10: a numeric-looking
-        # source would otherwise infer as int and diverge from batch
-        # x136's dtypes mid-join and at drain)
-        spark.conf.set(
-            "spark.sql.sources.partitionColumnTypeInference.enabled",
-            "false",
-        )
-        with tempfile.TemporaryDirectory() as ckpt:
-            q = (
-                spark.readStream.schema(docs.schema)
-                .option("maxFilesPerTrigger", "1")
-                .option("pathGlobFilter", "*.parquet")
-                .parquet(src_dir)
-                .writeStream.foreachBatch(one_batch)
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+    # lang/source come back as PARTITION VALUES on every store read —
+    # pin them to string (ADVICE r10: a numeric-looking source would
+    # otherwise infer as int and diverge from batch x136's dtypes
+    # mid-join and at drain)
+    with stream_confs(spark, 8, aqe=False), conf_scope(
+        spark,
+        {
+            **_DYNAMIC_OVERWRITE,
+            "spark.sql.sources.partitionColumnTypeInference.enabled": "false",
+        },
+    ):
+        drain(read_arrivals(spark, src_dir, docs.schema, "parquet"), one_batch)
 
         # drained read INSIDE the conf scope (same dtype pinning as the
         # in-batch reads). An all-tied/singleton corpus yields a pairs
@@ -6720,16 +5748,6 @@ def run_preference_pair_stream(
                 "margin",
             )
             .localCheckpoint(eager=True)
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", prev_mode
-        )
-        spark.conf.set(
-            "spark.sql.sources.partitionColumnTypeInference.enabled",
-            prev_infer,
         )
 
     shutil.rmtree(workdir, ignore_errors=True)
@@ -6766,7 +5784,7 @@ def run_shard_export_stream(
     store = os.path.join(workdir, "shards")
     os.makedirs(src_dir)
     t0 = int(_time.time()) - 3600
-    _stage_bucketed_files(
+    stage_arrivals(
         docs,
         src_dir,
         n_batches,
@@ -6777,10 +5795,7 @@ def run_shard_export_stream(
     )
 
     def one_batch(batch: DataFrame, batch_id: int) -> None:
-        sp = batch.sparkSession
-        prev_mode = sp.conf.get("spark.sql.sources.partitionOverwriteMode")
-        try:
-            sp.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        with conf_scope(batch.sparkSession, _DYNAMIC_OVERWRITE):
             (
                 shard_assignments(batch)
                 .withColumn("ingest_batch", F.lit(batch_id))
@@ -6788,33 +5803,9 @@ def run_shard_export_stream(
                 .partitionBy("ingest_batch", "shard")
                 .parquet(store)
             )
-        finally:
-            sp.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        # AQE off in-stream: bounded per-batch stages (family
-        # discipline r11 — AQE stage-materialization jobs are pure
-        # per-batch scheduling latency on these bounded plans)
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        with tempfile.TemporaryDirectory() as ckpt:
-            q = (
-                spark.readStream.schema(docs.schema)
-                .option("maxFilesPerTrigger", "1")
-                .option("pathGlobFilter", "*.parquet")
-                .parquet(src_dir)
-                .writeStream.foreachBatch(one_batch)
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+    with stream_confs(spark, 8, aqe=False):
+        drain(read_arrivals(spark, src_dir, docs.schema, "parquet"), one_batch)
 
     final = shard_balance_audit(
         spark.read.parquet(store).select("doc_id", "n_tok", "shard")
