@@ -2817,6 +2817,9 @@ def io4_streaming_sink_commit_log(spark, sf_dir):
         register_json_sink,
         snapshot_log,
     )
+    from kenya_agricultural_regions_weather_etl_pipeline_spark.streaming.runner import (
+        local_checkpoint,
+    )
 
     if not register_json_sink(spark):  # pragma: no cover
         raise RuntimeError("Python DataSource writer API unavailable")
@@ -2825,7 +2828,6 @@ def io4_streaming_sink_commit_log(spark, sf_dir):
     )
     src = tempfile.mkdtemp(prefix="io4_src_")
     sink = tempfile.mkdtemp(prefix="io4_sink_")
-    ckpt = tempfile.mkdtemp(prefix="io4_ckpt_")
     try:
         ev.repartition(3).write.mode("overwrite").json(src)
         now = _time.time()
@@ -2839,14 +2841,15 @@ def io4_streaming_sink_commit_log(spark, sf_dir):
             .option("pathGlobFilter", "*.json")
             .json(src)
         )
-        q = (
-            stream.writeStream.format("jsonl_commit")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        with local_checkpoint(spark) as ckpt:
+            (
+                stream.writeStream.format("jsonl_commit")
+                .option("path", sink)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+                .awaitTermination()
+            )
         log = snapshot_log(sink)
         assert len(log) == 3, log  # one snapshot per micro-batch
         assert [s["parent"] for s in log] == [None, 1, 2], log
@@ -2865,7 +2868,6 @@ def io4_streaming_sink_commit_log(spark, sf_dir):
         )
     finally:
         shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 def s6_variant_access(spark, sf_dir):

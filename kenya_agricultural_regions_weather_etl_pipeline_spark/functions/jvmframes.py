@@ -28,6 +28,7 @@ for corpus-sized data.
 from __future__ import annotations
 
 import math
+import re
 from typing import Iterable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession, types as T
@@ -49,6 +50,23 @@ def empty_frame(spark: SparkSession, ddl: str) -> DataFrame:
     return spark.range(0).selectExpr(*exprs)
 
 
+def _string_literal(s: str) -> str:
+    """A SQL expression for ``s`` that reads back exactly under either
+    ``spark.sql.parser.escapedStringLiterals`` setting. Quotes and
+    backslashes are the only characters the two parser modes read
+    differently (the default mode unescapes ``\\`` and ``''``; the
+    escaped mode keeps both verbatim), so they are spliced in as
+    ``chr(39)``/``chr(92)`` and never appear inside a literal."""
+    if "'" not in s and "\\" not in s:
+        return "'" + s + "'"
+    parts = re.split(r"(['\\])", s)
+    return "concat(" + ",".join(
+        f"chr({ord(p)})" if p in ("'", "\\") else "'" + p + "'"
+        for p in parts
+        if p
+    ) + ")"
+
+
 def _sql_literal(v, dt: T.DataType) -> str:
     if v is None:
         return f"CAST(NULL AS {dt.simpleString()})"
@@ -64,11 +82,7 @@ def _sql_literal(v, dt: T.DataType) -> str:
     if isinstance(dt, T.FloatType):
         return f"CAST('{float(v)!r}' AS FLOAT)"
     if isinstance(dt, T.StringType):
-        # backslash first: Spark's default SQL parser treats \ as an
-        # escape inside single-quoted literals (escapedStringLiterals
-        # is false), so a raw backslash would mis-round-trip
-        s = str(v).replace("\\", "\\\\").replace("'", "''")
-        return "'" + s + "'"
+        return _string_literal(str(v))
     if isinstance(dt, T.BooleanType):
         return "true" if v else "false"
     if isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
@@ -93,6 +107,12 @@ def values_frame(
             f"values_frame: {len(rows)} rows — not a bulk-load path"
         )
     fields = schema.fields
+    for i, r in enumerate(rows):
+        if len(r) != len(fields):
+            raise ValueError(
+                f"values_frame: row {i} has {len(r)} values, "
+                f"the schema has {len(fields)} columns"
+            )
     body = ",".join(
         "("
         + ",".join(_sql_literal(v, f.dataType) for v, f in zip(r, fields))

@@ -47,6 +47,7 @@ from .runner import (
     drain,
     latest_version,
     list_dir_names,
+    local_checkpoint,
     read_arrivals,
     stage_arrivals,
     stream_confs,
@@ -1732,7 +1733,7 @@ def run_weather_stream(
     )
     name = f"st10_{uuid.uuid4().hex}"
     expected = days * 15
-    with stream_confs(spark, 8, aqe=True), tempfile.TemporaryDirectory() as ckpt:
+    with stream_confs(spark, 8, aqe=True), local_checkpoint(spark) as ckpt:
         q = (
             agg.writeStream.format("memory")
             .queryName(name)
@@ -1866,7 +1867,7 @@ def run_weather_stream_etl(
         .option("edge_cases", "true")
         .load()
     )
-    with stream_confs(spark, 8, aqe=False), tempfile.TemporaryDirectory() as ckpt:
+    with stream_confs(spark, 8, aqe=False), local_checkpoint(spark) as ckpt:
         q = (
             stream.writeStream.foreachBatch(one_day)
             .option("checkpointLocation", ckpt)

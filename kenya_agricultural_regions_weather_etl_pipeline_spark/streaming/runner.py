@@ -9,8 +9,14 @@ that lifecycle through this module:
   turns it off, AQE) for the work a runner does around its stream;
 - :func:`stage_arrivals` / :func:`read_arrivals` — the backlog as one
   arrival file per micro-batch, written and read;
-- :func:`drain` — throwaway checkpoint, ``foreachBatch`` or memory
-  sink, ``availableNow``, await;
+- :func:`local_checkpoint` — the throwaway local checkpoint directory
+  every stream commits to, written through Spark's FileSystem-API
+  checkpoint manager: the default FileContext manager forks a
+  ``readlink`` process for every rename when Hadoop has no native
+  library, and its fail-if-exists rename guards nothing on a fresh
+  single-writer local directory;
+- :func:`drain` — local checkpoint, ``foreachBatch`` or memory sink,
+  ``availableNow``, await;
 - :func:`latest_version` — the head of a version-chained
   (``v{batch_id}``) state directory.
 """
@@ -25,19 +31,29 @@ from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame, SparkSession
 
+CHECKPOINT_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
+FS_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
 
 @contextmanager
 def conf_scope(spark: SparkSession, settings: dict[str, str]):
     """Set runtime confs for the body; restore the previous values in
-    ``finally``, whether the body returns or raises."""
-    prev = {k: spark.conf.get(k) for k in settings}
+    ``finally``, whether the body returns or raises. A key that had no
+    value before is unset again."""
+    prev = {k: spark.conf.get(k, None) for k in settings}
     try:
         for k, v in settings.items():
             spark.conf.set(k, v)
         yield
     finally:
         for k, v in prev.items():
-            spark.conf.set(k, v)
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def stream_confs(spark: SparkSession, parts: int, aqe: bool):
@@ -121,11 +137,29 @@ def read_arrivals(
     )
 
 
+@contextmanager
+def local_checkpoint(spark: SparkSession):
+    """Yield a fresh local checkpoint directory, deleted on exit, with
+    ``spark`` writing checkpoints through the FileSystem-API manager
+    for as long as the block runs.
+
+    Open it before ``start()`` and keep the query inside the block: the
+    query's offset and commit logs take the manager at ``start()``, and
+    each batch's state store takes it from the session snapshot made
+    there. The same files are written (``.crc`` siblings included), and
+    a local rename stays atomic. The conf is scoped, not session-wide,
+    so checkpoints the caller places elsewhere keep Spark's default."""
+    with conf_scope(
+        spark, {CHECKPOINT_MANAGER: FS_CHECKPOINT_MANAGER}
+    ), tempfile.TemporaryDirectory() as ckpt:
+        yield ckpt
+
+
 def drain(
     stream: DataFrame, one_batch=None, mode: str = "update"
 ) -> DataFrame | None:
     """Run ``stream`` to backlog exhaustion (``availableNow``) on a
-    throwaway checkpoint and wait for it.
+    :func:`local_checkpoint` and wait for it.
 
     With ``one_batch``, each micro-batch goes to
     ``foreachBatch(one_batch)`` and nothing is returned. Without it the
@@ -141,7 +175,8 @@ def drain(
         writer = writer.format("memory").queryName(name)
     else:
         writer = writer.foreachBatch(one_batch)
-    with tempfile.TemporaryDirectory() as ckpt:
+    spark = stream.sparkSession
+    with local_checkpoint(spark) as ckpt:
         (
             writer.option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
@@ -150,7 +185,6 @@ def drain(
         )
     if one_batch is not None:
         return None
-    spark = stream.sparkSession
     out = spark.table(name).localCheckpoint(eager=True)
     spark.catalog.dropTempView(name)
     return out

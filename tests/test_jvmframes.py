@@ -83,3 +83,28 @@ def test_values_frame_rejects_bulk(spark):
     rows = [(i,) for i in range(_MAX_VALUES_ROWS + 1)]
     with pytest.raises(ValueError):
         values_frame(spark, rows, "id long")
+
+
+@pytest.mark.parametrize(
+    "row, n", [((1, "a", "extra"), 3), ((2,), 1)], ids=["long", "short"]
+)
+def test_values_frame_names_a_row_of_the_wrong_arity(spark, row, n):
+    # too long used to be truncated silently; too short died in the parser
+    with pytest.raises(ValueError, match=rf"row 1 has {n} values, .* 2 col"):
+        values_frame(spark, [(0, "ok"), row], "k long, s string")
+
+
+@pytest.mark.parametrize("escaped", ["false", "true"])
+def test_values_frame_strings_under_either_parser_mode(spark, escaped):
+    key = "spark.sql.parser.escapedStringLiterals"
+    rows = [
+        (r"a\b",), ("it's",), (r"both\'n",), ("trail\\",), ("''",), ("plain",)
+    ]
+    spark.conf.set(key, escaped)
+    try:
+        got = values_frame(spark, rows, "s string")
+        assert [r.s for r in got.collect()] == [r[0] for r in rows]
+        plan = got._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan
+    finally:
+        spark.conf.set(key, "false")

@@ -7,8 +7,10 @@ batches is what single-batch availableNow runs never exercise.
 from __future__ import annotations
 
 import tempfile
+from contextlib import nullcontext
 
 import pyspark.sql.functions as F
+import pytest
 
 from kenya_agricultural_regions_weather_etl_pipeline_spark.sources.tables import (
     events_ts_unit,
@@ -19,6 +21,11 @@ from kenya_agricultural_regions_weather_etl_pipeline_spark.streaming.micro_batch
     EVENTS_RAW_SCHEMA,
     keyed_running_totals,
     windowed_event_counts,
+)
+from kenya_agricultural_regions_weather_etl_pipeline_spark.streaming.runner import (
+    CHECKPOINT_MANAGER,
+    FS_CHECKPOINT_MANAGER,
+    conf_scope,
 )
 
 
@@ -206,11 +213,16 @@ def test_jsonl_ingest_runs_twice_in_one_session(spark, sf01):
     assert a == b and len(a) > 0
 
 
-def test_checkpoint_resume_accumulates_state(spark, sf01, tmp_path):
+@pytest.mark.parametrize(
+    "manager", [None, FS_CHECKPOINT_MANAGER], ids=["filecontext", "filesystem"]
+)
+def test_checkpoint_resume_accumulates_state(spark, sf01, tmp_path, manager):
     """Exactly-once recovery: stop a windowed-agg stream after a first
     backlog, land MORE files, restart with the SAME checkpoint dir —
     the resumed query must fold the new data into the recovered state
-    (equal to one batch pass over everything), not reprocess or drop."""
+    (equal to one batch pass over everything), not reprocess or drop.
+    Run with Spark's default checkpoint manager and with the
+    FileSystem-API manager ``local_checkpoint`` writes through."""
     src = str(tmp_path / "src")
     ckpt = str(tmp_path / "ckpt")
     raw = _raw_events_micros(spark, sf01)
@@ -227,23 +239,32 @@ def test_checkpoint_resume_accumulates_state(spark, sf01, tmp_path):
             .withColumn("ts", F.timestamp_micros(F.col("ts_ns")))
         )
         agg = windowed_event_counts(stream)
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        scope = (
+            conf_scope(spark, {CHECKPOINT_MANAGER: manager})
+            if manager
+            else nullcontext()
         )
-        q.awaitTermination()
+        with scope:
+            q = (
+                agg.writeStream.format("memory")
+                .queryName(name)
+                .outputMode("complete")
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+        read = sum(p["numInputRows"] for p in q.recentProgress)
         out = spark.table(name).localCheckpoint(eager=True)
         spark.catalog.dropTempView(name)
-        return out
+        return out, read
 
-    first = run_once("ckpt_a")
+    first, _ = run_once("ckpt_a")
     assert first.count() > 0
     half2.write.mode("append").parquet(src)
-    resumed = run_once("ckpt_b")
+    resumed, read = run_once("ckpt_b")
+    # the restart read only the new files; the rest came from state
+    assert read == half2.count()
 
     batch = windowed_event_counts(
         spark.read.schema(EVENTS_RAW_SCHEMA)

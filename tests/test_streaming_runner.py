@@ -1,9 +1,11 @@
 """Contract of streaming/runner.py, the one micro-batch lifecycle every
 runner in streaming/micro_batch.py goes through: conf scoping (also
-when a batch raises), the conf a foreachBatch batch actually sees, the
-memory-sink drain, the named missing-state error, the quantile drains'
-named disagreement errors, and a structural guard that keeps the
-lifecycle skeleton from being hand-copied back into the runners.
+when a batch raises, and for keys that had no value), the conf a
+foreachBatch batch actually sees (including the local checkpoint's
+FileSystem-API manager), the memory-sink drain, the named missing-state
+error, the quantile drains' named disagreement errors, and structural
+guards that keep the lifecycle skeleton and the checkpoint manager
+from being hand-copied back into the runners.
 """
 
 from __future__ import annotations
@@ -22,6 +24,9 @@ from kenya_agricultural_regions_weather_etl_pipeline_spark.streaming.micro_batch
     _weighted_quantile_picks,
 )
 from kenya_agricultural_regions_weather_etl_pipeline_spark.streaming.runner import (
+    CHECKPOINT_MANAGER,
+    FS_CHECKPOINT_MANAGER,
+    conf_scope,
     drain,
     latest_version,
     read_arrivals,
@@ -31,6 +36,16 @@ from kenya_agricultural_regions_weather_etl_pipeline_spark.streaming.runner impo
 
 PARTS = "spark.sql.shuffle.partitions"
 AQE = "spark.sql.adaptive.enabled"
+
+
+def _outer(spark):
+    """The outer session's values of every conf the runner scopes; the
+    checkpoint manager is unset unless someone set it."""
+    return (
+        spark.conf.get(PARTS),
+        spark.conf.get(AQE),
+        spark.conf.get(CHECKPOINT_MANAGER, None),
+    )
 
 
 def _arrivals(spark, tmp_path, n=3):
@@ -49,19 +64,19 @@ def _arrivals(spark, tmp_path, n=3):
 
 
 def test_one_batch_sees_runner_parts_and_aqe(spark, tmp_path):
-    before = (spark.conf.get(PARTS), spark.conf.get(AQE))
+    before = _outer(spark)
     seen = []
 
     def one_batch(batch, batch_id):
         sess = batch.sparkSession
-        seen.append((batch_id, sess.conf.get(PARTS), sess.conf.get(AQE)))
+        seen.append((batch_id, *_outer(sess)))
 
     with stream_confs(spark, 3, aqe=False):
         drain(_arrivals(spark, tmp_path), one_batch)
     # one arrival file per micro-batch, each run in a session clone that
     # carries the runner's values, not the outer session's
-    assert seen == [(b, "3", "false") for b in range(3)]
-    assert (spark.conf.get(PARTS), spark.conf.get(AQE)) == before
+    assert seen == [(b, "3", "false", FS_CHECKPOINT_MANAGER) for b in range(3)]
+    assert _outer(spark) == before
 
 
 def test_aqe_true_leaves_session_aqe_alone(spark, tmp_path):
@@ -77,7 +92,7 @@ def test_aqe_true_leaves_session_aqe_alone(spark, tmp_path):
 def test_confs_restored_and_error_propagates_when_batch_raises(
     spark, tmp_path
 ):
-    before = (spark.conf.get(PARTS), spark.conf.get(AQE))
+    before = _outer(spark)
 
     def one_batch(batch, batch_id):
         raise ValueError(f"boom in batch {batch_id}")
@@ -85,7 +100,23 @@ def test_confs_restored_and_error_propagates_when_batch_raises(
     with pytest.raises(StreamingQueryException, match="boom in batch 0"):
         with stream_confs(spark, 3, aqe=False):
             drain(_arrivals(spark, tmp_path), one_batch)
-    assert (spark.conf.get(PARTS), spark.conf.get(AQE)) == before
+    assert _outer(spark) == before
+
+
+def test_conf_scope_unsets_a_key_that_had_no_value(spark):
+    key = "spark.graft.test.unsetKey"
+    parts = spark.conf.get(PARTS)
+    assert spark.conf.get(key, None) is None
+    with pytest.raises(ValueError, match="inside"):
+        with conf_scope(spark, {key: "a", PARTS: "7"}):
+            assert spark.conf.get(key) == "a"
+            raise ValueError("inside")
+    assert (spark.conf.get(key, None), spark.conf.get(PARTS)) == (None, parts)
+    with conf_scope(spark, {key: "b"}):
+        with conf_scope(spark, {key: "c"}):
+            assert spark.conf.get(key) == "c"
+        assert spark.conf.get(key) == "b"
+    assert spark.conf.get(key, None) is None
 
 
 def test_memory_sink_drain_materializes_and_drops_sink(spark, tmp_path):
@@ -155,7 +186,7 @@ def test_quantile_drain_names_what_disagrees(spark, tmp_path):
 
 _CONF_KEYS = {PARTS, AQE}
 # st10/st11 poll a processingTime stream until their source's backlog
-# is consumed, so they open their own checkpoint
+# is consumed, so they start their own query on a local_checkpoint
 _ALLOWED = {
     ("micro_batch.py", "run_weather_stream", "checkpointLocation"),
     ("micro_batch.py", "run_weather_stream_etl", "checkpointLocation"),
@@ -210,3 +241,41 @@ def test_stream_skeleton_lives_only_in_runner():
         for owner, kind in hits
     }
     assert stray <= _ALLOWED
+
+
+def _program_modules():
+    """Every module of the package, plus the driver entry module."""
+    root = os.path.dirname(pkg.__file__)
+    for d, _, files in os.walk(root):
+        yield from (os.path.join(d, f) for f in files if f.endswith(".py"))
+    yield os.path.join(os.path.dirname(root), "__spark_entry__.py")
+
+
+def test_local_checkpoints_go_through_runner():
+    """The checkpoint-manager conf is named only in runner.py, and every
+    other function that sets a ``checkpointLocation`` takes it from
+    ``local_checkpoint``, so no query checkpoints through the forking
+    FileContext manager and no checkpoint directory is left behind."""
+    runner = os.path.join(os.path.dirname(pkg.__file__), "streaming", "runner.py")
+    named, unmanaged = set(), set()
+    for path in _program_modules():
+        tree = ast.parse(open(path).read())
+        for top in tree.body:
+            nodes = list(ast.walk(top))
+            consts = {n.value for n in nodes if isinstance(n, ast.Constant)}
+            if consts & {CHECKPOINT_MANAGER, FS_CHECKPOINT_MANAGER}:
+                named.add(path)
+            calls = {
+                n.func.id
+                for n in nodes
+                if isinstance(n, ast.Call) and isinstance(n.func, ast.Name)
+            }
+            if (
+                path != runner
+                and "checkpointLocation" in consts
+                and "local_checkpoint" not in calls
+            ):
+                owner = getattr(top, "name", "<module>")
+                unmanaged.add((os.path.basename(path), owner))
+    assert named == {runner}
+    assert unmanaged == set()
