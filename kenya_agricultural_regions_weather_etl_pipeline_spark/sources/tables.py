@@ -124,18 +124,20 @@ _DF_MEMO: dict = {}
 
 
 def _table_sig(path: str, name: str):
-    """Stat signature for the memo key. For a parquet DIRECTORY the
-    dir's own (mtime, size) does not change when a same-named part file
-    is rewritten in place (ADVICE r10), so the newest child's stat is
-    folded in; regular files keep the plain 2-tuple."""
+    """Stat signature for the memo key. For a parquet DIRECTORY no
+    directory's own (mtime, size) changes when a same-named part file
+    is rewritten in place, at any depth (a partitioned table keeps its
+    part files under ``key=`` subdirectories), so the newest descendant
+    FILE's stat is folded in; regular files keep the plain 2-tuple."""
     p = os.path.join(path, f"{name}.parquet")
     try:
         st = os.stat(p)
         if os.path.isdir(p):
             newest = max(
                 (
-                    os.stat(os.path.join(p, c))
-                    for c in os.listdir(p)
+                    os.stat(os.path.join(d, f))
+                    for d, _, files in os.walk(p)
+                    for f in files
                 ),
                 key=lambda s: (s.st_mtime_ns, s.st_size),
                 default=st,

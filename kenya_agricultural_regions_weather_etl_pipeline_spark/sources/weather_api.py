@@ -5,11 +5,15 @@ driver loop (/root/reference/daily_weather_etl_kenya.py:143-154,
 30 s timeout each, try/except per region with quarantine-and-continue
 :193-207). Spark-first re-expression:
 
-- A **Spark 4 Python Data Source** (``WeatherApiDataSource``) with one
-  input partition per region — the per-region fetch parallelizes across
-  executors instead of serializing on the driver. Here it reads
-  deterministic synthetic fixtures instead of the live API (out of
-  scope), but the partition-per-region read path is the real shape.
+- A **Spark 4 Python Data Source** (``WeatherApiDataSource``) whose
+  input partitions are round-robin GROUPS of regions, one group per
+  executor slot (``numPartitions``, capped at one per region); each
+  task runs the reference's per-region loop over its group. The fetch
+  parallelizes across executors instead of serializing on the driver,
+  while a scan pays the fixed per-Python-task start-up once per slot,
+  not once per region. Here ``read`` emits deterministic synthetic
+  fixtures instead of calling the live API (out of scope), but the
+  slot-grouped read path is the real shape.
 - The JSON decode + nested flatten (:157-188) is `from_json` with the
   explicit RAW_WEATHER_SCHEMA + one `select` — Catalyst prunes unused
   nested fields.
@@ -105,46 +109,82 @@ def fixture_payloads(
     return rows
 
 
+def num_partitions(options) -> int:
+    """Input partitions for a weather scan: the ``numPartitions`` option
+    (the name Spark's JDBC source uses for the same idea) capped at one
+    per region; without the option, one partition per region."""
+    n_regions = len(AGRICULTURAL_REGIONS)
+    raw = options.get("numPartitions")
+    if raw is None:
+        return n_regions
+    try:
+        n = int(str(raw))
+    except ValueError:
+        n = 0
+    if n < 1:
+        raise ValueError(
+            f"weather source option numPartitions must be a positive "
+            f"integer, got {raw!r}"
+        )
+    return min(n, n_regions)
+
+
+def region_groups(n: int) -> list[tuple[str, ...]]:
+    """The regions dealt round-robin into ``n`` groups (1 <= n <= 15)."""
+    regions = list(AGRICULTURAL_REGIONS)
+    return [tuple(regions[i::n]) for i in range(n)]
+
+
+def _read_group(partition):
+    """(region, raw) rows of one region group for days [day_from,
+    day_to): the reference's sequential per-region loop (:143) over the
+    group, one document per region and day. With ``edge_cases``, day 0
+    also carries each region's duplicate document (exercises R1 dedup)
+    and Nakuru's one malformed document (exercises the E1 quarantine) —
+    the same rows as ``fixture_payloads``, deterministic, no RNG."""
+    for region in partition.regions:
+        for day in range(partition.day_from, partition.day_to):
+            payload = synthesize_raw_payload(region, day)
+            yield (region, payload)
+            if partition.edge_cases and day == 0:
+                yield (region, payload)
+                if region == "Nakuru":
+                    yield (region, '{"this is": not valid json')
+
+
 try:  # Spark 4 Python Data Source API (pyspark.sql.datasource)
     from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
-    class _RegionPartition(InputPartition):
-        def __init__(self, region: str, days: int, edge_cases: bool):
-            self.region = region
-            self.days = days
+    class _RegionGroup(InputPartition):
+        def __init__(
+            self, regions: tuple[str, ...], day_from: int, day_to: int, edge_cases: bool
+        ):
+            self.regions = regions
+            self.day_from = day_from
+            self.day_to = day_to
             self.edge_cases = edge_cases
 
     class WeatherApiReader(DataSourceReader):
         def __init__(self, options):
             self.days = int(options.get("days", 3))
             self.edge_cases = options.get("edge_cases", "true") == "true"
+            self.num_partitions = num_partitions(options)
 
         def partitions(self):
-            # one partition per region — the distributed analogue of the
-            # reference's sequential per-region loop (:143)
             return [
-                _RegionPartition(r, self.days, self.edge_cases)
-                for r in AGRICULTURAL_REGIONS
+                _RegionGroup(g, 0, self.days, self.edge_cases)
+                for g in region_groups(self.num_partitions)
             ]
 
         def read(self, partition):
-            # emits the SAME row set as fixture_payloads(): day-0 duplicate
-            # per region (exercises R1 dedup) and one malformed document
-            # (exercises the E1 quarantine), deterministic — no RNG
-            for day in range(partition.days):
-                payload = synthesize_raw_payload(partition.region, day)
-                yield (partition.region, payload)
-                if partition.edge_cases and day == 0:
-                    yield (partition.region, payload)
-            if partition.edge_cases and partition.region == "Nakuru":
-                yield (partition.region, '{"this is": not valid json')
+            return _read_group(partition)
 
     class WeatherApiDataSource(DataSource):
-        """`spark.read.format("weather_api")` — partition-per-region source.
+        """`spark.read.format("weather_api")` — slot-grouped region source.
 
-        A live implementation would issue the HTTP GET inside ``read``
-        (executor-side, parallel, with per-partition failure isolation);
-        here it emits the deterministic fixture payloads.
+        A live implementation would issue the HTTP GETs inside ``read``
+        (executor-side, parallel across groups, with per-region failure
+        isolation); here it emits the deterministic fixture payloads.
         """
 
         @classmethod
@@ -161,12 +201,12 @@ try:  # Spark 4 Python Data Source API (pyspark.sql.datasource)
 
     class WeatherStreamReader(DataSourceStreamReader):
         """Micro-batch stream of the same simulated per-region feed:
-        one DAY of payloads per micro-batch, one input partition per
-        region within each batch — the streaming twin of the batch
-        partition-per-region scan. Offsets are day counters, so
-        recovery/replay (partitions(start, end)) is exact and
-        deterministic; ``read`` runs executor-side like the batch path
-        (NOT the driver-side SimpleDataSourceStreamReader variant —
+        one DAY of payloads per micro-batch, split into the same
+        round-robin region groups as the batch scan (``numPartitions``
+        groups, one per region without the option). Offsets are day
+        counters, so recovery/replay (partitions(start, end)) is exact
+        and deterministic; ``read`` runs executor-side like the batch
+        path (NOT the driver-side SimpleDataSourceStreamReader variant —
         a live feed would poll the API from executors in parallel)."""
 
         def __init__(self, options):
@@ -176,6 +216,7 @@ try:  # Spark 4 Python Data Source API (pyspark.sql.datasource)
             # so streaming R1 dedup / E1 quarantine are exercised; off
             # by default to keep the plain-feed consumers exact
             self.edge_cases = options.get("edge_cases", "false") == "true"
+            self.num_partitions = num_partitions(options)
 
         def initialOffset(self) -> dict:
             return {"day": 0}
@@ -190,35 +231,19 @@ try:  # Spark 4 Python Data Source API (pyspark.sql.datasource)
 
         def partitions(self, start: dict, end: dict):
             return [
-                _StreamSlice(r, start["day"], end["day"], self.edge_cases)
-                for r in AGRICULTURAL_REGIONS
+                _RegionGroup(g, start["day"], end["day"], self.edge_cases)
+                for g in region_groups(self.num_partitions)
             ]
 
         def read(self, partition):
-            for day in range(partition.day_from, partition.day_to):
-                payload = synthesize_raw_payload(partition.region, day)
-                yield (partition.region, payload)
-                if getattr(partition, "edge_cases", False) and day == 0:
-                    yield (partition.region, payload)  # replayed doc (R1)
-                    if partition.region == "Nakuru":
-                        # malformed document (E1 quarantine)
-                        yield (partition.region, '{"this is": not valid json')
+            return _read_group(partition)
 
         def commit(self, end: dict) -> None:
             pass
 
-    class _StreamSlice(InputPartition):
-        def __init__(
-            self, region: str, day_from: int, day_to: int, edge_cases: bool = False
-        ):
-            self.region = region
-            self.day_from = day_from
-            self.day_to = day_to
-            self.edge_cases = edge_cases
-
     class WeatherStreamDataSource(DataSource):
         """`spark.readStream.format("weather_stream")` — day-per-batch,
-        partition-per-region streaming source."""
+        slot-grouped region streaming source."""
 
         @classmethod
         def name(cls):
@@ -254,7 +279,12 @@ def register_weather_stream(spark: SparkSession) -> bool:
 def read_raw(spark: SparkSession, days: int = 3, use_datasource: bool = True) -> DataFrame:
     """Raw (region, raw json string) frame — datasource path or fixture fallback."""
     if use_datasource and register_weather_source(spark):
-        return spark.read.format("weather_api").option("days", days).load()
+        return (
+            spark.read.format("weather_api")
+            .option("days", days)
+            .option("numPartitions", spark.sparkContext.defaultParallelism)
+            .load()
+        )
     schema = StructType(
         [StructField("region", StringType(), False), StructField("raw", StringType())]
     )

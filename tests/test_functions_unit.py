@@ -705,6 +705,33 @@ def test_union_find_matches_distributed_propagation(spark):
     }
 
 
+def test_load_table_sees_nested_part_file_rewritten_in_place(spark, tmp_path):
+    """A partitioned table keeps its part files under ``key=``
+    subdirectories. Rewriting one in place under the same name changes
+    no directory's (mtime, size), so the memo key must fold in the
+    descendant files or load_table serves the stale plan."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from kenya_agricultural_regions_weather_etl_pipeline_spark.sources.tables import (
+        load_table,
+    )
+
+    part = tmp_path / "t.parquet" / "key=1" / "part-0.parquet"
+    part.parent.mkdir(parents=True)
+    pq.write_table(pa.table({"v": [1, 2]}), part)
+    first = load_table(spark, str(tmp_path), "t")
+    assert first.count() == 2
+    staged = tmp_path / "staged.parquet"
+    pq.write_table(pa.table({"v": [1, 2, 3, 4, 5]}), staged)
+    shutil.copyfile(staged, part)  # truncates and rewrites the same inode
+    second = load_table(spark, str(tmp_path), "t")
+    assert second is not first
+    assert second.count() == 5
+
+
 def test_events_ts_unit_detection(spark, sf01, tmp_path):
     """The events loader must adapt to the generator's physical
     timestamp unit: footer detection on the real table, plus both
