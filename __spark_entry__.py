@@ -3317,11 +3317,10 @@ def st12_dedup_ingest(spark, sf_dir):
 
 def st10_weather_stream(spark, sf_dir):
     """Custom Python STREAMING DataSource (§2.7 × S1): the simulated
-    weather feed as a day-per-micro-batch stream, its regions grouped
-    one input partition per executor slot
-    (sources/weather_api.WeatherStreamDataSource), consumed to
-    backlog exhaustion and rolled up per region. Offsets are day
-    counters, so replay/recovery is exact; reads run executor-side
+    weather feed as a day-per-micro-batch stream, all regions read by
+    one input partition (sources/weather_api.WeatherStreamDataSource),
+    consumed to backlog exhaustion and rolled up per region. Offsets
+    are day counters, so replay/recovery is exact; reads run executor-side
     exactly like the batch Python DataSource. Oracle = the same
     deterministic fixture payloads evaluated in Python and inlined as
     VALUES (the e2e_weather_pipeline pattern)."""
@@ -6940,7 +6939,7 @@ GROUP BY region, year, month
 
 
 def e2e_weather_pipeline(spark, sf_dir):
-    """THE reference pipeline end-to-end (S1 slot-grouped region source →
+    """THE reference pipeline end-to-end (S1 one-partition region source →
     S2 nested flatten → E1 quarantine → F4 null-tolerant access → S3
     broadcast dim join → R1 dedup → F1/F2 validation → P1-P6 derivations
     → P9 pinned extraction ts → P10 ordered load projection), against the

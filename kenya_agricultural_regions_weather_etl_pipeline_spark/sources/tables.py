@@ -127,17 +127,19 @@ def _table_sig(path: str, name: str):
     """Stat signature for the memo key. For a parquet DIRECTORY no
     directory's own (mtime, size) changes when a same-named part file
     is rewritten in place, at any depth (a partitioned table keeps its
-    part files under ``key=`` subdirectories), so the newest descendant
-    FILE's stat is folded in; regular files keep the plain 2-tuple."""
+    part files under ``key=`` subdirectories), so the newest stat over
+    every descendant is folded in: files catch an in-place rewrite,
+    subdirectories catch a deleted or added part file (their mtime
+    changes). Regular files keep the plain 2-tuple."""
     p = os.path.join(path, f"{name}.parquet")
     try:
         st = os.stat(p)
         if os.path.isdir(p):
             newest = max(
                 (
-                    os.stat(os.path.join(d, f))
-                    for d, _, files in os.walk(p)
-                    for f in files
+                    os.stat(os.path.join(d, c))
+                    for d, dirs, files in os.walk(p)
+                    for c in dirs + files
                 ),
                 key=lambda s: (s.st_mtime_ns, s.st_size),
                 default=st,

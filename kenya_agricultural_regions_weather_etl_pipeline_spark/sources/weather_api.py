@@ -5,15 +5,14 @@ driver loop (/root/reference/daily_weather_etl_kenya.py:143-154,
 30 s timeout each, try/except per region with quarantine-and-continue
 :193-207). Spark-first re-expression:
 
-- A **Spark 4 Python Data Source** (``WeatherApiDataSource``) whose
-  input partitions are round-robin GROUPS of regions, one group per
-  executor slot (``numPartitions``, capped at one per region); each
-  task runs the reference's per-region loop over its group. The fetch
-  parallelizes across executors instead of serializing on the driver,
-  while a scan pays the fixed per-Python-task start-up once per slot,
-  not once per region. Here ``read`` emits deterministic synthetic
-  fixtures instead of calling the live API (out of scope), but the
-  slot-grouped read path is the real shape.
+- A **Spark 4 Python Data Source** (``WeatherApiDataSource``) with ONE
+  input partition whose task runs the reference's per-region loop over
+  all 15 regions. The fetch runs executor-side instead of on the
+  driver, and a scan pays the fixed per-Python-task start-up (~0.2 s
+  here, whatever the task reads) once, not once per region. Here
+  ``read`` emits deterministic synthetic fixtures instead of calling
+  the live API (out of scope), but the executor-side read path is the
+  real shape.
 - The JSON decode + nested flatten (:157-188) is `from_json` with the
   explicit RAW_WEATHER_SCHEMA + one `select` — Catalyst prunes unused
   nested fields.
@@ -90,6 +89,19 @@ def synthesize_raw_payload(region: str, day: int, seed_salt: int = 0) -> str:
     return json.dumps(doc)
 
 
+_MALFORMED = ("Nakuru", '{"this is": not valid json')
+
+
+def _region_docs(region: str, day_from: int, day_to: int, duplicates: bool):
+    """One region's documents for days [day_from, day_to), one per day;
+    with ``duplicates`` day 0 is emitted twice (exercises R1 dedup)."""
+    for day in range(day_from, day_to):
+        payload = synthesize_raw_payload(region, day)
+        yield (region, payload)
+        if duplicates and day == 0:
+            yield (region, payload)  # duplicate (region, dt)
+
+
 def fixture_payloads(
     days: int = 3,
     with_duplicates: bool = True,
@@ -97,94 +109,43 @@ def fixture_payloads(
 ) -> list[tuple[str, str]]:
     """(region, raw_json) rows across all 15 regions × days, plus the
     edge rows FIXTURES.md §1.1 mandates."""
-    rows: list[tuple[str, str]] = []
-    for region in AGRICULTURAL_REGIONS:
-        for day in range(days):
-            payload = synthesize_raw_payload(region, day)
-            rows.append((region, payload))
-            if with_duplicates and day == 0:
-                rows.append((region, payload))  # duplicate (region, dt)
+    rows = [
+        doc
+        for region in AGRICULTURAL_REGIONS
+        for doc in _region_docs(region, 0, days, with_duplicates)
+    ]
     if with_malformed:
-        rows.append(("Nakuru", '{"this is": not valid json'))
+        rows.append(_MALFORMED)
     return rows
-
-
-def num_partitions(options) -> int:
-    """Input partitions for a weather scan: the ``numPartitions`` option
-    (the name Spark's JDBC source uses for the same idea) capped at one
-    per region; without the option, one partition per region."""
-    n_regions = len(AGRICULTURAL_REGIONS)
-    raw = options.get("numPartitions")
-    if raw is None:
-        return n_regions
-    try:
-        n = int(str(raw))
-    except ValueError:
-        n = 0
-    if n < 1:
-        raise ValueError(
-            f"weather source option numPartitions must be a positive "
-            f"integer, got {raw!r}"
-        )
-    return min(n, n_regions)
-
-
-def region_groups(n: int) -> list[tuple[str, ...]]:
-    """The regions dealt round-robin into ``n`` groups (1 <= n <= 15)."""
-    regions = list(AGRICULTURAL_REGIONS)
-    return [tuple(regions[i::n]) for i in range(n)]
-
-
-def _read_group(partition):
-    """(region, raw) rows of one region group for days [day_from,
-    day_to): the reference's sequential per-region loop (:143) over the
-    group, one document per region and day. With ``edge_cases``, day 0
-    also carries each region's duplicate document (exercises R1 dedup)
-    and Nakuru's one malformed document (exercises the E1 quarantine) —
-    the same rows as ``fixture_payloads``, deterministic, no RNG."""
-    for region in partition.regions:
-        for day in range(partition.day_from, partition.day_to):
-            payload = synthesize_raw_payload(region, day)
-            yield (region, payload)
-            if partition.edge_cases and day == 0:
-                yield (region, payload)
-                if region == "Nakuru":
-                    yield (region, '{"this is": not valid json')
 
 
 try:  # Spark 4 Python Data Source API (pyspark.sql.datasource)
     from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
-    class _RegionGroup(InputPartition):
-        def __init__(
-            self, regions: tuple[str, ...], day_from: int, day_to: int, edge_cases: bool
-        ):
-            self.regions = regions
-            self.day_from = day_from
-            self.day_to = day_to
-            self.edge_cases = edge_cases
-
     class WeatherApiReader(DataSourceReader):
         def __init__(self, options):
             self.days = int(options.get("days", 3))
             self.edge_cases = options.get("edge_cases", "true") == "true"
-            self.num_partitions = num_partitions(options)
 
         def partitions(self):
-            return [
-                _RegionGroup(g, 0, self.days, self.edge_cases)
-                for g in region_groups(self.num_partitions)
-            ]
+            # one partition: each Python task costs a fixed worker
+            # start-up, which dwarfs reading 15 small documents
+            return [InputPartition(0)]
 
         def read(self, partition):
-            return _read_group(partition)
+            # the reference's sequential per-region loop (:143): the SAME
+            # rows as fixture_payloads(), so both read_raw paths agree —
+            # day-0 duplicate per region (R1 dedup) and one malformed
+            # document per scan (E1 quarantine), deterministic, no RNG
+            yield from fixture_payloads(self.days, self.edge_cases, self.edge_cases)
 
     class WeatherApiDataSource(DataSource):
-        """`spark.read.format("weather_api")` — slot-grouped region source.
+        """`spark.read.format("weather_api")` — the 15-region feed as one
+        executor-side scan.
 
         A live implementation would issue the HTTP GETs inside ``read``
-        (executor-side, parallel across groups, with per-region failure
-        isolation); here it emits the deterministic fixture payloads.
+        (executor-side, with per-region failure isolation); here it
+        emits the deterministic fixture payloads.
         """
 
         @classmethod
@@ -201,13 +162,13 @@ try:  # Spark 4 Python Data Source API (pyspark.sql.datasource)
 
     class WeatherStreamReader(DataSourceStreamReader):
         """Micro-batch stream of the same simulated per-region feed:
-        one DAY of payloads per micro-batch, split into the same
-        round-robin region groups as the batch scan (``numPartitions``
-        groups, one per region without the option). Offsets are day
+        one DAY of payloads per micro-batch, read like the batch scan
+        by one input partition over all regions. Offsets are day
         counters, so recovery/replay (partitions(start, end)) is exact
         and deterministic; ``read`` runs executor-side like the batch
         path (NOT the driver-side SimpleDataSourceStreamReader variant —
-        a live feed would poll the API from executors in parallel)."""
+        a live feed would poll the API from an executor, not the
+        driver)."""
 
         def __init__(self, options):
             self.max_days = int(options.get("days", 3))
@@ -216,7 +177,6 @@ try:  # Spark 4 Python Data Source API (pyspark.sql.datasource)
             # so streaming R1 dedup / E1 quarantine are exercised; off
             # by default to keep the plain-feed consumers exact
             self.edge_cases = options.get("edge_cases", "false") == "true"
-            self.num_partitions = num_partitions(options)
 
         def initialOffset(self) -> dict:
             return {"day": 0}
@@ -230,20 +190,22 @@ try:  # Spark 4 Python Data Source API (pyspark.sql.datasource)
             return {"day": self._cur}
 
         def partitions(self, start: dict, end: dict):
-            return [
-                _RegionGroup(g, start["day"], end["day"], self.edge_cases)
-                for g in region_groups(self.num_partitions)
-            ]
+            return [InputPartition((start["day"], end["day"]))]
 
         def read(self, partition):
-            return _read_group(partition)
+            day_from, day_to = partition.value
+            for region in AGRICULTURAL_REGIONS:
+                yield from _region_docs(region, day_from, day_to, self.edge_cases)
+            # the malformed document belongs to day 0's batch (E1 quarantine)
+            if self.edge_cases and day_from <= 0 < day_to:
+                yield _MALFORMED
 
         def commit(self, end: dict) -> None:
             pass
 
     class WeatherStreamDataSource(DataSource):
-        """`spark.readStream.format("weather_stream")` — day-per-batch,
-        slot-grouped region streaming source."""
+        """`spark.readStream.format("weather_stream")` — day-per-batch
+        streaming source over all 15 regions."""
 
         @classmethod
         def name(cls):
@@ -279,12 +241,7 @@ def register_weather_stream(spark: SparkSession) -> bool:
 def read_raw(spark: SparkSession, days: int = 3, use_datasource: bool = True) -> DataFrame:
     """Raw (region, raw json string) frame — datasource path or fixture fallback."""
     if use_datasource and register_weather_source(spark):
-        return (
-            spark.read.format("weather_api")
-            .option("days", days)
-            .option("numPartitions", spark.sparkContext.defaultParallelism)
-            .load()
-        )
+        return spark.read.format("weather_api").option("days", days).load()
     schema = StructType(
         [StructField("region", StringType(), False), StructField("raw", StringType())]
     )

@@ -1699,10 +1699,9 @@ def run_weather_stream(
     spark: SparkSession, days: int = 3, timeout_s: float = 120.0
 ) -> DataFrame:
     """st10: consume the custom Python streaming source
-    (sources/weather_api.WeatherStreamDataSource — day-per-batch, the
-    15 regions dealt into one input partition per executor slot) to
-    backlog exhaustion and return the per-region rollup (doc count +
-    max temperature).
+    (sources/weather_api.WeatherStreamDataSource — day-per-batch, all
+    15 regions read by one input partition) to backlog exhaustion and
+    return the per-region rollup (doc count + max temperature).
 
     The source's offset is a day counter that stops advancing at the
     backlog end, so "done" is observable as the sink reaching
@@ -1721,7 +1720,6 @@ def run_weather_stream(
     stream = (
         spark.readStream.format("weather_stream")
         .option("days", str(days))
-        .option("numPartitions", spark.sparkContext.defaultParallelism)
         .load()
     )
     doc = F.from_json(F.col("raw"), RAW_WEATHER_SCHEMA)
@@ -1867,7 +1865,6 @@ def run_weather_stream_etl(
         # region (streaming R1 dedup) + one malformed doc (E1
         # quarantine side output)
         .option("edge_cases", "true")
-        .option("numPartitions", spark.sparkContext.defaultParallelism)
         .load()
     )
     with stream_confs(spark, 8, aqe=False), local_checkpoint(spark) as ckpt:

@@ -652,8 +652,8 @@ def test_apply_cdc_clause_semantics(spark):
 def test_weather_stream_reader_offsets_and_slices():
     """Pure-Python contract of the custom streaming source: offsets
     advance one day per batch and clamp at the backlog end; a
-    (start, end] range fans out to one slice per region, each yielding
-    exactly (end-start) deterministic documents."""
+    (start, end] range is one slice that yields exactly (end-start)
+    deterministic documents per region."""
     import json
 
     from kenya_agricultural_regions_weather_etl_pipeline_spark.sources.regions import (
@@ -671,9 +671,10 @@ def test_weather_stream_reader_offsets_and_slices():
     assert r.latestOffset() == {"day": 2}  # clamps: backlog exhausted
 
     slices = r.partitions({"day": 0}, {"day": 2})
-    assert len(slices) == len(AGRICULTURAL_REGIONS)
+    assert len(slices) == 1
     rows = list(r.read(slices[0]))
-    assert len(rows) == 2
+    assert len(rows) == 2 * len(AGRICULTURAL_REGIONS)
+    assert sorted({region for region, _ in rows}) == sorted(AGRICULTURAL_REGIONS)
     region, raw = rows[0]
     assert raw == synthesize_raw_payload(region, 0)
     assert json.loads(raw)["region"] == region
@@ -730,6 +731,39 @@ def test_load_table_sees_nested_part_file_rewritten_in_place(spark, tmp_path):
     second = load_table(spark, str(tmp_path), "t")
     assert second is not first
     assert second.count() == 5
+
+
+def test_load_table_sees_nested_part_file_deleted(spark, tmp_path):
+    """Deleting a part file that is not the newest file changes no
+    remaining file's stat, only its ``key=`` directory's mtime; the memo
+    key must fold that in or load_table serves a plan that lists the
+    deleted file."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from kenya_agricultural_regions_weather_etl_pipeline_spark.sources.tables import (
+        load_table,
+    )
+
+    table = tmp_path / "t.parquet"
+    old = table / "key=1" / "part-0.parquet"
+    old.parent.mkdir(parents=True)
+    pq.write_table(pa.table({"v": [1, 2]}), old)
+    newest = table / "key=2" / "part-0.parquet"
+    newest.parent.mkdir()
+    pq.write_table(pa.table({"v": [3]}), newest)
+    # back-date everything, so the newest part file is not the deleted
+    # one and a stat taken now is the newest in the tree
+    for i, f in enumerate((old, old.parent, newest, newest.parent, table)):
+        os.utime(f, ns=(10**9 * (i + 1),) * 2)
+    first = load_table(spark, str(tmp_path), "t")
+    assert first.count() == 3
+    old.unlink()  # changes only key=1's mtime
+    second = load_table(spark, str(tmp_path), "t")
+    assert second is not first
+    assert second.count() == 1
 
 
 def test_events_ts_unit_detection(spark, sf01, tmp_path):
