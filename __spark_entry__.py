@@ -4053,10 +4053,12 @@ def st23_export_manifest_stream(spark, sf_dir):
     (streaming/micro_batch.run_export_manifest_stream): every per-shard
     statistic is a commutative monoid (counts add, the
     order-independent fingerprint is a modular sum), so each batch
-    folds via the combiner law with mod applied per fold — which is
-    ALSO the overflow guard io7's batch form defers to the scale path.
-    8-row version-chained state, replay-safe; drained head == batch
-    io7 exactly (one oracle, batch and streaming)."""
+    folds via the combiner law in one shard-keyed streaming aggregate;
+    the fingerprint sums exact decimal(38,0) hashes and the mod applies
+    once at drain — which is ALSO the overflow guard io7's batch form
+    defers to the scale path. 8-row state in Spark's state store,
+    replay-safe through its checkpoint; drained manifest == batch io7
+    exactly (one oracle, batch and streaming)."""
     apply_runtime_confs(spark)
     return ST.run_export_manifest_stream(spark, sf_dir)
 
@@ -4068,7 +4070,8 @@ def st25_bpe_stats_stream(spark, sf_dir):
     pair counts form a commutative monoid over document batches —
     each arrival folds via the r6/st18/st23 combiner law into an
     alphabet²-bounded state table (~1.5 k rows regardless of corpus
-    size), version-chained and replay-safe. Top-50 ranked once at
+    size) held by one native streaming aggregate, replay-safe through
+    its checkpoint. Top-50 ranked once at
     drain; drained head == batch x87 exactly (one oracle, batch and
     streaming) — tokenizer-training statistics stay current without a
     corpus recount."""
@@ -4080,9 +4083,10 @@ def st18_corpus_telemetry(spark, sf_dir):
     """Dataset-card telemetry maintained ON INGEST
     (streaming/micro_batch.run_corpus_telemetry): per-language doc/
     token/char counts and mean quality folded into a standing summary
-    as document batches stream in — r6's combiner law on a stream,
-    state bounded by |languages| forever, version-chained exactly-once.
-    Final summary == the batch GROUP BY (the oracle)."""
+    as document batches stream in — r6's combiner law as one native
+    streaming aggregate, state bounded by |languages| forever,
+    exactly-once through its checkpoint. Final summary == the batch
+    GROUP BY (the oracle)."""
     apply_runtime_confs(spark)
     return ST.run_corpus_telemetry(spark, sf_dir)
 
@@ -6450,7 +6454,8 @@ def st27_drift_stream(spark, sf_dir):
     micro_batch.run_drift_stream): each document micro-batch folds its
     (metric, bin) counts into a 32-row standing state by the combiner
     law — distribution drift of the newest dump is visible at ARRIVAL,
-    not at the next batch audit. Version-chained exactly-once; PSI
+    not at the next batch audit. One native streaming aggregate,
+    exactly-once through its checkpoint; PSI
     finalization runs once at drain; the scoreboard == batch a21 (one
     oracle for the monitor and its deployment — with st26 this
     completes the ingest-time monitoring pair: contract + drift)."""

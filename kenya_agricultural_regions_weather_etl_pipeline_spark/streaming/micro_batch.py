@@ -18,8 +18,11 @@ reads a directory of thousands of files with ``maxFilesPerTrigger``
 pacing the backlog.
 
 Every runner here drives the shared lifecycle in ``runner.py``: its
-conf window, one-file-per-batch arrivals, the drain and the head of
-its version-chained state.
+conf window, one-file-per-batch arrivals, the drain and, for the folds
+that chain their state by version, the head of that chain. Folds whose
+state is an associative aggregate over a bounded key set (st18, st23,
+st25, st27) are one native streaming aggregate instead: its state store
+and checkpoint do the merge, and a complete-mode memory sink drains it.
 """
 
 from __future__ import annotations
@@ -339,9 +342,12 @@ def foreach_batch_upsert(
     (/root/reference/daily_weather_etl_kenya.py:392-468).
 
     Each micro-batch: read the current target, union the batch, keep the
-    greatest-``order_cols`` row per key, atomically overwrite. The merged
-    frame is localCheckpoint-ed BEFORE the overwrite so the write never
-    reads the path it is replacing. Runs to completion (availableNow).
+    greatest-``order_cols`` row per key, atomically overwrite. The
+    merged frame is localCheckpoint-ed BEFORE the overwrite so the write
+    never reads the path it is replacing. Runs to completion
+    (availableNow). Only a target with no entries yet counts as the
+    first batch; a read or schema error on an existing target
+    propagates and stops the stream with the target untouched.
 
     Scale notes: at 100 TB the target is date-partitioned and the merge
     uses dynamic partition overwrite (``write_merged_partitioned``) so a
@@ -350,18 +356,14 @@ def foreach_batch_upsert(
     batch ids: re-running a batch re-derives the same merged table
     (the merge is idempotent), which is the foreachBatch contract.
     """
-    from pyspark.errors import AnalysisException
-
     data_path = os.path.join(target, "data")
     cols = list(dict.fromkeys([*keys, *order_cols, *payload_cols]))
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         sp = batch_df.sparkSession
         cur = batch_df.select(*cols)
-        try:
+        if list_dir_names(sp, data_path):
             cur = sp.read.parquet(data_path).unionByName(cur)
-        except AnalysisException:
-            pass  # first batch: target does not exist yet
         from pyspark.sql import Window
 
         w = Window.partitionBy(*keys).orderBy(
@@ -1293,17 +1295,19 @@ def run_graph_serve_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def run_export_manifest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Export manifest maintained ON INGEST (st23) — io7's integrity
-    artifact as a stream fold, so the manifest is always current
-    instead of a full-corpus recompute before each export. Every
-    per-shard statistic io7 reports is a COMMUTATIVE MONOID: doc/char
-    counts add, and the order-independent fingerprint is a modular
-    sum, so merging a batch is agg(A∪B) = merge(agg(A), agg(B)) —
-    r6/st18's combiner law — with the mod applied at every fold
-    (associativity of + mod p), which doubles as the overflow guard
-    the batch io7 docstring defers to the scale path: partials never
-    exceed p + batch contribution. State = 8 rows forever,
-    version-chained v{b} from v{b-1} (replay-safe exactly-once); the
-    drained head equals batch io7 EXACTLY — one oracle, batch and
+    artifact as a streaming aggregate, so the manifest is always
+    current instead of a full-corpus recompute before each export.
+    Every per-shard statistic io7 reports is a COMMUTATIVE MONOID:
+    doc/char counts add, and the order-independent fingerprint is a
+    modular sum, so one shard-keyed streaming aggregate is the whole
+    fold — agg(A∪B) = merge(agg(A), agg(B)), r6/st18's combiner law,
+    with Spark's state store and checkpoint doing the merge
+    (replay-safe exactly-once). The fingerprint partial sums each
+    document's hash (< p) as ``decimal(38,0)``, exact for ~10^29
+    documents, and the mod applies once at drain; that is the overflow
+    guard the batch io7 docstring defers to the scale path (a ``long``
+    sum would wrap). State = 8 rows forever, one state partition; the
+    drained manifest equals batch io7 EXACTLY — one oracle, batch and
     streaming."""
     import shutil
 
@@ -1312,157 +1316,97 @@ def run_export_manifest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.files import write_jsonl
     from ..sources.tables import load_table
 
-    _P = 1_000_000_007
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "n_chars"
     )
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("text", StringType()),
-            StructField("n_chars", LongType()),
-        ]
-    )
     workdir = tempfile.mkdtemp(prefix="kw_st23_")
-    src_dir = os.path.join(workdir, "arrivals")
-    state = os.path.join(workdir, "state")
-    os.makedirs(src_dir)
-    write_jsonl(docs.repartition(4), src_dir)
-
-    def partials(df: DataFrame) -> DataFrame:
-        return (
-            df.select(
+    try:
+        src_dir = os.path.join(workdir, "arrivals")
+        write_jsonl(docs.repartition(4), src_dir)
+        arrivals = read_arrivals(
+            spark, src_dir, "doc_id long, text string, n_chars long", "json"
+        )
+        manifest = (
+            arrivals.select(
                 (split_bucket(F.col("text")) % 8).alias("shard"),
                 "n_chars",
-                rolling_hash(F.col("text")).alias("fp"),
+                rolling_hash(F.col("text")).cast("decimal(38,0)").alias("fp"),
             )
             .groupBy("shard")
             .agg(
                 F.count(F.lit(1)).cast("long").alias("n_docs"),
                 F.sum("n_chars").cast("long").alias("n_chars"),
-                F.pmod(F.sum("fp"), F.lit(_P)).cast("long").alias("fp_sum"),
+                F.sum("fp").alias("fp_sum"),
             )
         )
-
-    def one_batch(batch: DataFrame, batch_id: int) -> None:
-        sp = batch.sparkSession
-        cur = partials(batch)
-        if batch_id > 0:
-            prev = sp.read.parquet(os.path.join(state, f"v{batch_id - 1}"))
-            cur = (
-                prev.unionByName(cur)
-                .groupBy("shard")
-                .agg(
-                    F.sum("n_docs").cast("long").alias("n_docs"),
-                    F.sum("n_chars").cast("long").alias("n_chars"),
-                    F.pmod(F.sum("fp_sum"), F.lit(_P))
-                    .cast("long")
-                    .alias("fp_sum"),
-                )
-            )
-        cur.write.mode("overwrite").parquet(
-            os.path.join(state, f"v{batch_id}")
-        )
-
-    with stream_confs(spark, 8, aqe=True):
-        drain(read_arrivals(spark, src_dir, schema, "json"), one_batch)
-
-    out = (
-        spark.read.parquet(latest_version(spark, state))
-        .select(
+        with stream_confs(spark, 1, aqe=True):
+            state = drain(manifest, mode="complete")
+        return state.select(
             "shard",
             "n_docs",
             "n_chars",
-            F.col("fp_sum").alias("fingerprint"),
+            F.pmod(F.col("fp_sum"), F.lit(1_000_000_007))
+            .cast("long")
+            .alias("fingerprint"),
         )
-        .localCheckpoint(eager=True)
-    )
-    shutil.rmtree(workdir, ignore_errors=True)
-    return out
+    finally:
+        shutil.rmtree(workdir, ignore_errors=True)
 
 
 def run_bpe_stats_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE pair-count statistics maintained ON INGEST (st25) — x87's
-    tokenizer-training statistic as a stream fold. Pair counts are a
-    COMMUTATIVE MONOID over document batches: a word's pair multiset
-    is a fixed function of the word, so Σ_batches wf_batch(w)·pairs(w)
-    = wf_total(w)·pairs(w) — merging a batch is agg(A∪B) =
-    merge(agg(A), agg(B)), the r6/st18/st23 combiner law. State is the
-    FULL pair table (alphabet²-bounded — ~1.5 k rows whatever the
-    corpus size), version-chained v{b} from v{b-1} (replay-safe
-    exactly-once); the global top-50 is taken once at drain, so no
-    per-batch ranking work. Drained head EQUALS batch x87 — one
-    oracle, batch and streaming. At 100 TB this is how tokenizer
-    retraining stays current without a corpus recount: each arrival
-    batch pays one vocabulary-keyed aggregation over ITS OWN words
-    plus a bounded state merge."""
+    tokenizer-training statistic as a streaming aggregate. Pair counts
+    are a COMMUTATIVE MONOID over document batches: every word
+    occurrence contributes its fixed pair multiset, so counting the
+    exploded pairs of each batch and summing across batches is agg(A∪B)
+    = merge(agg(A), agg(B)), the r6/st18/st23 combiner law, with Spark's
+    state store and checkpoint doing the merge (replay-safe
+    exactly-once). A stream allows one aggregation, so pairs are counted
+    per word occurrence rather than weighted by a word-frequency
+    partial; the counts are the same. State is the FULL pair table
+    (alphabet²-bounded — ~1.5 k rows whatever the corpus size), one
+    state partition; the global top-50 is taken once at drain, so no
+    per-batch ranking work. Drained head EQUALS batch x87 — one oracle,
+    batch and streaming. At 100 TB this is how tokenizer retraining
+    stays current without a corpus recount: each arrival batch pays one
+    pair-keyed aggregation over ITS OWN words plus a bounded state
+    merge."""
     import shutil
 
     from ..sources.files import write_jsonl
     from ..sources.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("text", StringType()),
-        ]
-    )
     workdir = tempfile.mkdtemp(prefix="kw_st25_")
-    src_dir = os.path.join(workdir, "arrivals")
-    state = os.path.join(workdir, "state")
-    os.makedirs(src_dir)
-    write_jsonl(docs.repartition(4), src_dir)
-
-    def partials(df: DataFrame) -> DataFrame:
-        words = (
-            df.select(
+    try:
+        src_dir = os.path.join(workdir, "arrivals")
+        write_jsonl(docs.repartition(4), src_dir)
+        arrivals = read_arrivals(
+            spark, src_dir, "doc_id long, text string", "json"
+        )
+        pair_counts = (
+            arrivals.select(
                 F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("w")
             )
-            .filter(F.col("w") != "")
-            .groupBy("w")
-            .agg(F.count(F.lit(1)).alias("wf"))
-        )
-        return (
-            words.filter(F.length("w") >= 2)
+            .filter(F.length("w") >= 2)
             .select(
                 F.explode(
                     F.expr(
                         "transform(sequence(1, length(w) - 1),"
                         " i -> substring(w, i, 2))"
                     )
-                ).alias("pair"),
-                "wf",
+                ).alias("pair")
             )
             .groupBy("pair")
-            .agg(F.sum("wf").cast("bigint").alias("pair_count"))
+            .agg(F.count(F.lit(1)).alias("pair_count"))
         )
-
-    def one_batch(batch: DataFrame, batch_id: int) -> None:
-        sp = batch.sparkSession
-        cur = partials(batch)
-        if batch_id > 0:
-            prev = sp.read.parquet(os.path.join(state, f"v{batch_id - 1}"))
-            cur = (
-                prev.unionByName(cur)
-                .groupBy("pair")
-                .agg(F.sum("pair_count").cast("bigint").alias("pair_count"))
-            )
-        cur.write.mode("overwrite").parquet(
-            os.path.join(state, f"v{batch_id}")
-        )
-
-    with stream_confs(spark, 8, aqe=True):
-        drain(read_arrivals(spark, src_dir, schema, "json"), one_batch)
-
-    out = (
-        spark.read.parquet(latest_version(spark, state))
-        .orderBy(F.col("pair_count").desc(), F.col("pair").asc())
-        .limit(50)
-        .localCheckpoint(eager=True)
-    )
-    shutil.rmtree(workdir, ignore_errors=True)
-    return out
+        with stream_confs(spark, 1, aqe=True):
+            state = drain(pair_counts, mode="complete")
+        return state.orderBy(
+            F.col("pair_count").desc(), F.col("pair").asc()
+        ).limit(50)
+    finally:
+        shutil.rmtree(workdir, ignore_errors=True)
 
 
 def run_model_score_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1544,94 +1488,75 @@ def run_model_score_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return final
 
 
+def corpus_telemetry_counts(docs: DataFrame) -> DataFrame:
+    """st18's per-language partial over ``docs`` (lang, text, n_chars):
+    document, token and char counts plus the quality sum. Every column
+    is an exact long sum, so the aggregate is the same over one batch,
+    a stream's micro-batches or a stream resumed from its checkpoint.
+    Quality folds as integer micro-units: per-doc quantize, then exact
+    (order-free) long sums — a raw double sum re-associates per run and
+    can flip a 4dp half boundary (the src8 flake class in
+    e2e_corpus_clean)."""
+    from ..functions.text import quality_score, token_count
+
+    q_int = F.floor(
+        quality_score(F.col("text")) * F.lit(1e6) + F.lit(0.5)
+    ).cast("long")
+    return docs.groupBy("lang").agg(
+        F.count(F.lit(1)).cast("long").alias("n_docs"),
+        F.sum(token_count(F.col("text"))).cast("long").alias("n_tokens"),
+        F.sum("n_chars").cast("long").alias("sum_chars"),
+        F.sum(q_int).cast("long").alias("q_sum"),
+    )
+
+
 def run_corpus_telemetry(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus telemetry maintained ON INGEST (st18): per-language
     document/token/char counts and mean quality, folded into a standing
     per-language summary as document batches stream in — the dataset
     card (x69's block) kept current per ingest batch instead of
     recomputed over history. The state is the per-language PARTIAL
-    (counts + quality sum): merging a batch is agg(A∪B) =
-    merge(agg(A), agg(B)) — r6's combiner law on a stream — so state
-    is bounded by |languages| forever and each batch costs one
-    lang-keyed shuffle of ITS OWN rows. Version-chained (v{batch_id}
-    from v{batch_id-1}, overwrite-on-replay) like st15/st16 —
-    crash-replay recomputes, never double-counts. Over the finite
+    (:func:`corpus_telemetry_counts`): merging a batch is agg(A∪B) =
+    merge(agg(A), agg(B)) — r6's combiner law on a stream — so one
+    lang-keyed streaming aggregate is the whole fold, its state bounded
+    by |languages| forever (one state partition), each batch one
+    shuffle of ITS OWN rows, and Spark's state store and checkpoint
+    make crash-replay recompute, never double-count. Over the finite
     backlog the final summary equals the batch GROUP BY — the exact
     DuckDB oracle."""
     import shutil
 
-    from ..functions.text import quality_score, token_count
     from ..sources.files import write_jsonl
     from ..sources.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "text", "n_chars"
     )
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("lang", StringType()),
-            StructField("text", StringType()),
-            StructField("n_chars", LongType()),
-        ]
-    )
     workdir = tempfile.mkdtemp(prefix="kw_st18_")
-    src_dir = os.path.join(workdir, "arrivals")
-    state = os.path.join(workdir, "state")
-    os.makedirs(src_dir)
-    write_jsonl(docs.repartition(4), src_dir)
-
-    def partials(df: DataFrame) -> DataFrame:
-        # quality folds as integer micro-units: per-doc quantize, then
-        # exact (order-free) long sums across batches — a raw double
-        # q_sum re-associates per run and can flip a 4dp half boundary
-        # (the src8 flake class in e2e_corpus_clean)
-        q_int = F.floor(
-            quality_score(F.col("text")) * F.lit(1e6) + F.lit(0.5)
-        ).cast("long")
-        return df.groupBy("lang").agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.sum(token_count(F.col("text"))).cast("long").alias("n_tokens"),
-            F.sum("n_chars").cast("long").alias("sum_chars"),
-            F.sum(q_int).cast("long").alias("q_sum"),
+    try:
+        src_dir = os.path.join(workdir, "arrivals")
+        write_jsonl(docs.repartition(4), src_dir)
+        arrivals = read_arrivals(
+            spark,
+            src_dir,
+            "doc_id long, lang string, text string, n_chars long",
+            "json",
         )
-
-    def one_batch(batch: DataFrame, batch_id: int) -> None:
-        sp = batch.sparkSession
-        cur = partials(batch)
-        if batch_id > 0:
-            prev = sp.read.parquet(os.path.join(state, f"v{batch_id - 1}"))
-            cur = (
-                prev.unionByName(cur)
-                .groupBy("lang")
-                .agg(
-                    F.sum("n_docs").cast("long").alias("n_docs"),
-                    F.sum("n_tokens").cast("long").alias("n_tokens"),
-                    F.sum("sum_chars").cast("long").alias("sum_chars"),
-                    F.sum("q_sum").cast("long").alias("q_sum"),
-                )
-            )
-        cur.write.mode("overwrite").parquet(
-            os.path.join(state, f"v{batch_id}")
+        with stream_confs(spark, 1, aqe=True):
+            final = drain(corpus_telemetry_counts(arrivals), mode="complete")
+        return final.select(
+            "lang",
+            "n_docs",
+            "n_tokens",
+            "sum_chars",
+            round_half_up(
+                F.col("q_sum").cast("double")
+                / (F.lit(1e6) * F.col("n_docs")),
+                4,
+            ).alias("mean_quality"),
         )
-
-    with stream_confs(spark, 8, aqe=True):
-        drain(read_arrivals(spark, src_dir, schema, "json"), one_batch)
-
-    final = spark.read.parquet(latest_version(spark, state))
-    out = final.select(
-        "lang",
-        "n_docs",
-        "n_tokens",
-        "sum_chars",
-        round_half_up(
-            F.col("q_sum").cast("double")
-            / (F.lit(1e6) * F.col("n_docs")),
-            4,
-        ).alias("mean_quality"),
-    ).localCheckpoint(eager=True)
-    shutil.rmtree(workdir, ignore_errors=True)
-    return out
+    finally:
+        shutil.rmtree(workdir, ignore_errors=True)
 
 
 def run_jsonl_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1839,23 +1764,21 @@ def run_weather_stream_etl(
         # historical days are never re-read or re-written (run_batch
         # applies the same pruning)
         touched = collect_touched_partitions(day, "date")
-        from pyspark.errors import AnalysisException
-
-        try:
+        sp = raw_batch.sparkSession
+        # first batch only: the target directory is still empty. A read
+        # error or schema drift on a written target propagates —
+        # treating it as "first batch" would silently replace the
+        # touched partitions with just this day's rows.
+        merged = day
+        if list_dir_names(sp, target):
             existing = (
-                raw_batch.sparkSession.read.parquet(target)
+                sp.read.parquet(target)
                 .filter(F.col("date").isin(touched))
                 .select(*WEATHER_LOAD_COLUMNS)
             )
             merged = merge_last_write_wins(
                 existing, day, list(WEATHER_KEY), "extraction_timestamp"
             )
-        except AnalysisException:
-            # first batch only: the target path does not exist yet. Any
-            # OTHER failure (transient read error, schema drift) must
-            # propagate — treating it as "first batch" would silently
-            # replace the touched partitions with just this day's rows.
-            merged = day
         write_merged_partitioned(merged, target, ["date"])
 
     stream = (
@@ -2778,7 +2701,7 @@ def run_contract_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     State is two version-chained tables (v{batch_id} from
     v{batch_id-1}, overwrite-on-replay = exactly-once under
-    crash-replay, the st15/st18 discipline):
+    crash-replay, the st15/st16 discipline):
 
     - ``counters`` — ONE row of additive partials (row count, null
       keys, range/status/date violations, FK orphans). Merging a batch
@@ -2990,12 +2913,12 @@ def run_drift_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     drift of the newest dump vs the standing corpus, visible at arrival
     time instead of at the next batch audit. Each arriving document
     micro-batch folds its (metric, bin) reference/current counts into a
-    standing 32-row state table — counts are a commutative monoid
-    (operators/quality.drift_binned_counts), so merging a batch is one
-    sum-by-key of its OWN rows, r6's combiner law again; state is
-    bounded by |metrics|·|bins| forever. Version-chained
-    (v{batch_id} from v{batch_id-1}, overwrite-on-replay exactly-once,
-    the st15/st18 discipline). The PSI finalization
+    standing 32-row state — counts are a commutative monoid
+    (operators/quality.drift_binned_counts), so the fold is one
+    (metric, bin)-keyed streaming aggregate, r6's combiner law again,
+    with Spark's state store and checkpoint doing the merge
+    (replay-safe exactly-once); state is bounded by |metrics|·|bins|
+    forever, one state partition. The PSI finalization
     (operators/quality.psi_scoreboard: densify, smooth, integer-
     quantized term fold) runs ONCE at drain; over the finite backlog
     the scoreboard equals batch a21 — one oracle for the monitor and
@@ -3009,44 +2932,21 @@ def run_drift_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "text", "n_chars"
     )
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("source", StringType()),
-            StructField("text", StringType()),
-            StructField("n_chars", LongType()),
-        ]
-    )
     workdir = tempfile.mkdtemp(prefix="kw_st27_")
-    src_dir = os.path.join(workdir, "arrivals")
-    state = os.path.join(workdir, "state")
-    os.makedirs(src_dir)
-    write_jsonl(docs.repartition(4), src_dir)
-
-    def one_batch(batch: DataFrame, batch_id: int) -> None:
-        sp = batch.sparkSession
-        cur = drift_binned_counts(batch)
-        if batch_id > 0:
-            prev = sp.read.parquet(os.path.join(state, f"v{batch_id - 1}"))
-            cur = (
-                prev.unionByName(cur)
-                .groupBy("metric", "bin")
-                .agg(
-                    F.sum("c_ref").cast("long").alias("c_ref"),
-                    F.sum("c_cur").cast("long").alias("c_cur"),
-                )
-            )
-        cur.write.mode("overwrite").parquet(
-            os.path.join(state, f"v{batch_id}")
+    try:
+        src_dir = os.path.join(workdir, "arrivals")
+        write_jsonl(docs.repartition(4), src_dir)
+        arrivals = read_arrivals(
+            spark,
+            src_dir,
+            "doc_id long, source string, text string, n_chars long",
+            "json",
         )
-
-    with stream_confs(spark, 8, aqe=False):
-        drain(read_arrivals(spark, src_dir, schema, "json"), one_batch)
-
-    counts = spark.read.parquet(latest_version(spark, state))
-    out = psi_scoreboard(spark, counts).localCheckpoint(eager=True)
-    shutil.rmtree(workdir, ignore_errors=True)
-    return out
+        with stream_confs(spark, 1, aqe=False):
+            counts = drain(drift_binned_counts(arrivals), mode="complete")
+        return psi_scoreboard(spark, counts)
+    finally:
+        shutil.rmtree(workdir, ignore_errors=True)
 
 
 def run_token_budget_stream(
@@ -3884,7 +3784,7 @@ def run_unseen_mass_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     singleton in two batches is a doubleton overall, which is exactly
     why the state must be term-keyed counts, not the fof itself).
     Drained report == batch x113, one oracle. Version-chained
-    overwrite state = replay-safe exactly-once (st25's discipline)."""
+    overwrite state = replay-safe exactly-once (st16's discipline)."""
     import shutil
 
     from ..sources.files import write_jsonl

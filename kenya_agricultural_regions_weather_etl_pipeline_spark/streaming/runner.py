@@ -197,18 +197,16 @@ def list_dir_names(spark: SparkSession, path: str) -> list[str]:
     Local paths take one ``os.listdir``; any non-local scheme goes
     through the Hadoop FileSystem API, so the same call works when the
     store lives on object storage. Returns [] for a missing directory
-    on either path."""
+    on either path; any other listing error propagates, since callers
+    read [] as "no data yet"."""
     if os.path.isdir(path):
         return os.listdir(path)
-    try:
-        jvm = spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        if not fs.exists(hpath):
-            return []
-        return [s.getPath().getName() for s in fs.listStatus(hpath)]
-    except Exception:
+    jvm = spark._jvm
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(hpath):
         return []
+    return [s.getPath().getName() for s in fs.listStatus(hpath)]
 
 
 def latest_version(spark: SparkSession, state: str) -> str:

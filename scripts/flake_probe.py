@@ -8,13 +8,15 @@ double avg whose 6dp digit flipped with fold order). Fix pattern:
 quantize per-row to integer micro-units, sum exactly, divide once.
 
 Usage: python scripts/flake_probe.py [name ...]   (default: all paired)
+The scale-factor dir is quickverify's (QUICKVERIFY_SF_DIR).
 """
 from __future__ import annotations
 
 import math
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 import pandas as pd  # noqa: E402
@@ -23,8 +25,8 @@ import __spark_entry__ as E  # noqa: E402
 from kenya_agricultural_regions_weather_etl_pipeline_spark.session import (  # noqa: E402
     get_spark,
 )
+from quickverify import SF  # noqa: E402  (QUICKVERIFY_SF_DIR)
 
-SF = "/root/testdata/sf0.01"
 TABLES = (
     "region nation customer supplier part orders lineitem events "
     "documents embeddings"

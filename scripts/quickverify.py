@@ -6,9 +6,10 @@ Exit 0 iff every named query matches rows+schema+values exactly.
 from __future__ import annotations
 
 import math
+import os as _os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))))
 
 import duckdb
 import pandas as pd  # noqa: E402
@@ -17,8 +18,6 @@ import __spark_entry__ as E  # noqa: E402
 from kenya_agricultural_regions_weather_etl_pipeline_spark.session import (  # noqa: E402
     get_spark,
 )
-
-import os as _os
 
 SF = _os.environ.get("QUICKVERIFY_SF_DIR", "/root/testdata/sf0.01")
 TABLES = (

@@ -19,6 +19,7 @@ from kenya_agricultural_regions_weather_etl_pipeline_spark.sources.tables import
 )
 from kenya_agricultural_regions_weather_etl_pipeline_spark.streaming.micro_batch import (
     EVENTS_RAW_SCHEMA,
+    corpus_telemetry_counts,
     keyed_running_totals,
     windowed_event_counts,
 )
@@ -179,6 +180,53 @@ def _time_ordered_fragments(spark, sf01, tmp_path, n_files=4):
     return path
 
 
+def test_foreach_batch_upsert_keeps_target_on_schema_drift(spark, tmp_path):
+    """A target the batch cannot be unioned with is existing data, not a
+    first batch: the merge must raise and leave all of its rows in
+    place, instead of overwriting them with the arriving batch alone."""
+    import os
+    import time
+
+    from pyspark.errors import StreamingQueryException
+
+    from kenya_agricultural_regions_weather_etl_pipeline_spark.streaming.micro_batch import (
+        foreach_batch_upsert,
+    )
+    from kenya_agricultural_regions_weather_etl_pipeline_spark.streaming.runner import (
+        read_arrivals,
+        stage_arrivals,
+    )
+
+    target = str(tmp_path / "target")
+    data = os.path.join(target, "data")
+    spark.range(100).select(  # no ``value`` column
+        F.col("id").alias("user_id"),
+        F.lit("view").alias("event_type"),
+        F.col("id").alias("ts_ns"),
+        F.col("id").alias("event_id"),
+    ).write.parquet(data)
+    schema = "user_id long, event_type string, ts_ns long, event_id long, value double"
+    src = str(tmp_path / "arrivals")
+    os.makedirs(src)
+    stage_arrivals(
+        spark.createDataFrame([(7, "click", 1, 1, 1.0)], schema),
+        src,
+        1,
+        F.lit(0),
+        time.time() - 600,
+        1,
+    )
+    with pytest.raises(StreamingQueryException, match="value"):
+        foreach_batch_upsert(
+            read_arrivals(spark, src, schema, "json"),
+            target,
+            keys=["user_id", "event_type"],
+            order_cols=["ts_ns", "event_id"],
+            payload_cols=["value"],
+        )
+    assert spark.read.parquet(data).count() == 100
+
+
 def test_stream_stream_join_multi_batch_equals_batch(spark, sf01, tmp_path):
     """st7: the click->purchase join must find every pair even when the
     two sides arrive over many micro-batches (cross-batch join state),
@@ -213,32 +261,56 @@ def test_jsonl_ingest_runs_twice_in_one_session(spark, sf01):
     assert a == b and len(a) > 0
 
 
+def _events_fold(spark, sf01):
+    """st1's windowed counts over the events, ``ts`` as epoch micros."""
+
+    def agg(df):
+        return windowed_event_counts(
+            df.withColumnRenamed("ts", "ts_ns").withColumn(
+                "ts", F.timestamp_micros(F.col("ts_ns"))
+            )
+        )
+
+    return _raw_events_micros(spark, sf01), "event_id", agg
+
+
+def _telemetry_fold(spark, sf01):
+    """st18's native per-language fold over the documents."""
+    docs = load_table(spark, sf01, "documents").select(
+        "doc_id", "lang", "text", "n_chars"
+    )
+    return docs, "doc_id", corpus_telemetry_counts
+
+
 @pytest.mark.parametrize(
-    "manager", [None, FS_CHECKPOINT_MANAGER], ids=["filecontext", "filesystem"]
+    "manager, fold",
+    [
+        (None, _events_fold),
+        (FS_CHECKPOINT_MANAGER, _events_fold),
+        (FS_CHECKPOINT_MANAGER, _telemetry_fold),
+    ],
+    ids=["filecontext", "filesystem", "st18_telemetry"],
 )
-def test_checkpoint_resume_accumulates_state(spark, sf01, tmp_path, manager):
-    """Exactly-once recovery: stop a windowed-agg stream after a first
+def test_checkpoint_resume_accumulates_state(
+    spark, sf01, tmp_path, manager, fold
+):
+    """Exactly-once recovery: stop a stateful aggregate after a first
     backlog, land MORE files, restart with the SAME checkpoint dir —
     the resumed query must fold the new data into the recovered state
     (equal to one batch pass over everything), not reprocess or drop.
-    Run with Spark's default checkpoint manager and with the
-    FileSystem-API manager ``local_checkpoint`` writes through."""
+    st1's windowed agg runs with Spark's default checkpoint manager and
+    with the FileSystem-API manager ``local_checkpoint`` writes
+    through; st18's native fold (the aggregate its runner streams) runs
+    with the latter."""
     src = str(tmp_path / "src")
     ckpt = str(tmp_path / "ckpt")
-    raw = _raw_events_micros(spark, sf01)
-    half1 = raw.filter(F.col("event_id") % 2 == 0)
-    half2 = raw.filter(F.col("event_id") % 2 == 1)
+    rows, key, agg = fold(spark, sf01)
+    half1 = rows.filter(F.col(key) % 2 == 0)
+    half2 = rows.filter(F.col(key) % 2 == 1)
     half1.write.mode("append").parquet(src)
 
     def run_once(name):
-        stream = (
-            spark.readStream.schema(EVENTS_RAW_SCHEMA)
-            .format("parquet")
-            .load(src)
-            .withColumnRenamed("ts", "ts_ns")
-            .withColumn("ts", F.timestamp_micros(F.col("ts_ns")))
-        )
-        agg = windowed_event_counts(stream)
+        stream = spark.readStream.schema(rows.schema).format("parquet").load(src)
         scope = (
             conf_scope(spark, {CHECKPOINT_MANAGER: manager})
             if manager
@@ -246,7 +318,8 @@ def test_checkpoint_resume_accumulates_state(spark, sf01, tmp_path, manager):
         )
         with scope:
             q = (
-                agg.writeStream.format("memory")
+                agg(stream)
+                .writeStream.format("memory")
                 .queryName(name)
                 .outputMode("complete")
                 .option("checkpointLocation", ckpt)
@@ -266,14 +339,33 @@ def test_checkpoint_resume_accumulates_state(spark, sf01, tmp_path, manager):
     # the restart read only the new files; the rest came from state
     assert read == half2.count()
 
-    batch = windowed_event_counts(
-        spark.read.schema(EVENTS_RAW_SCHEMA)
-        .parquet(src)
-        .withColumnRenamed("ts", "ts_ns")
-        .withColumn("ts", F.timestamp_micros(F.col("ts_ns")))
-    )
+    batch = agg(spark.read.schema(rows.schema).parquet(src))
     assert resumed.exceptAll(batch).isEmpty()
     assert batch.exceptAll(resumed).isEmpty()
+
+
+# Spark jobs of build plus a ``noop`` write (the ``numTotalJobs``
+# delta) for the folds that keep their state in a native streaming
+# aggregate: 8/8/8/15, plus one when the query is the first of the
+# process. The version-chained v{n} folds they replace ran 19-23.
+NATIVE_FOLD_JOBS = {
+    "st18_corpus_telemetry": 9,
+    "st23_export_manifest_stream": 9,
+    "st25_bpe_stats_stream": 9,
+    "st27_drift_stream": 16,
+}
+
+
+@pytest.mark.parametrize("name", sorted(NATIVE_FOLD_JOBS))
+def test_native_fold_job_count_stays_at_ceiling(spark, sf01, name):
+    import __spark_entry__ as entrymod
+
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    before = sched.numTotalJobs()
+    entrymod.queries()[name](spark, sf01).write.format("noop").mode(
+        "overwrite"
+    ).save()
+    assert sched.numTotalJobs() - before <= NATIVE_FOLD_JOBS[name]
 
 
 def test_weather_stream_etl_partition_layout(spark):

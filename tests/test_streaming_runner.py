@@ -2,10 +2,11 @@
 runner in streaming/micro_batch.py goes through: conf scoping (also
 when a batch raises, and for keys that had no value), the conf a
 foreachBatch batch actually sees (including the local checkpoint's
-FileSystem-API manager), the memory-sink drain, the named missing-state
-error, the quantile drains' named disagreement errors, and structural
-guards that keep the lifecycle skeleton and the checkpoint manager
-from being hand-copied back into the runners.
+FileSystem-API manager), the memory-sink drain, the state listing
+(empty only for a missing directory), the named missing-state error,
+the quantile drains' named disagreement errors, and structural guards
+that keep the lifecycle skeleton and the checkpoint manager from being
+hand-copied back into the runners.
 """
 
 from __future__ import annotations
@@ -29,6 +30,7 @@ from kenya_agricultural_regions_weather_etl_pipeline_spark.streaming.runner impo
     conf_scope,
     drain,
     latest_version,
+    list_dir_names,
     read_arrivals,
     stage_arrivals,
     stream_confs,
@@ -142,6 +144,14 @@ def test_latest_version_names_the_state_dir_when_empty(spark, tmp_path, entries)
             os.makedirs(state / d)
     with pytest.raises(RuntimeError, match=str(state)):
         latest_version(spark, str(state))
+
+
+def test_list_dir_names_is_empty_only_for_a_missing_dir(spark, tmp_path):
+    assert list_dir_names(spark, str(tmp_path / "missing")) == []
+    assert list_dir_names(spark, "file://" + str(tmp_path / "missing")) == []
+    # any other listing error propagates: callers read [] as "no data"
+    with pytest.raises(Exception, match="nosuchscheme"):
+        list_dir_names(spark, "nosuchscheme://host/state")
 
 
 def _bucket_store(spark, tmp_path):
