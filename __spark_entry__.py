@@ -3996,7 +3996,7 @@ def st17_vector_index_ingest(spark, sf_dir):
     (streaming/micro_batch.run_vector_index_ingest): embedding batches
     stream in, each micro-batch cell-assigns against the fixed IVF
     codebook and lands in a cell-partitioned physical index via
-    batch-keyed dynamic partition overwrite (replay-safe); queries then
+    batch-keyed directory overwrite (replay-safe); queries then
     probe the accumulated index with partition-pruned reads + exact
     rerank. Returns exactly the batch x5d result — the incremental
     index and the one-shot search share one oracle."""
@@ -4025,7 +4025,7 @@ def st22_vector_serve_stream(spark, sf_dir):
     cell-partitioned layout), then QUERY batches stream in and each
     is answered with bounded work — probe its cells, partition-pruned
     read of only those directories, exact rerank — written
-    replay-safe by serve_batch dynamic partition overwrite. Drained
+    replay-safe into its own serve_batch directory. Drained
     union == batch x5d on the full query set: one oracle, FOUR
     physical strategies (x5d join-pruned, x5f layout-pruned, st17
     stream-ingested, st22 stream-served)."""

@@ -164,8 +164,9 @@ def drain(
     With ``one_batch``, each micro-batch goes to
     ``foreachBatch(one_batch)`` and nothing is returned. Without it the
     stream lands in a memory sink under a unique query name; its rows
-    are materialized and the sink dropped, so repeated runs in one
-    session never accumulate sink tables. ``mode`` is the output mode
+    are materialized and the sink dropped, also when the stream
+    raises, so repeated runs in one session never accumulate sink
+    tables. ``mode`` is the output mode
     (``complete``/``append`` matter for stateful memory-sink streams).
     An exception raised in ``one_batch`` stops the query and propagates
     from here."""
@@ -176,18 +177,20 @@ def drain(
     else:
         writer = writer.foreachBatch(one_batch)
     spark = stream.sparkSession
-    with local_checkpoint(spark) as ckpt:
-        (
-            writer.option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-    if one_batch is not None:
-        return None
-    out = spark.table(name).localCheckpoint(eager=True)
-    spark.catalog.dropTempView(name)
-    return out
+    try:
+        with local_checkpoint(spark) as ckpt:
+            (
+                writer.option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+                .awaitTermination()
+            )
+        if one_batch is not None:
+            return None
+        return spark.table(name).localCheckpoint(eager=True)
+    finally:
+        if one_batch is None:
+            spark.catalog.dropTempView(name)
 
 
 def list_dir_names(spark: SparkSession, path: str) -> list[str]:

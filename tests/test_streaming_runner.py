@@ -4,8 +4,10 @@ when a batch raises, and for keys that had no value), the conf a
 foreachBatch batch actually sees (including the local checkpoint's
 FileSystem-API manager), the memory-sink drain, the state listing
 (empty only for a missing directory), the named missing-state error,
-the quantile drains' named disagreement errors, and structural guards
-that keep the lifecycle skeleton and the checkpoint manager from being
+the quantile drains' named disagreement errors, cleanup when a stream
+or a runner raises (sink views, workdirs, cached frames), and
+structural guards that keep the lifecycle skeleton, the checkpoint
+manager, hand-managed temp dirs and dynamic overwrite from being
 hand-copied back into the runners.
 """
 
@@ -13,6 +15,7 @@ from __future__ import annotations
 
 import ast
 import os
+import tempfile
 import time
 
 import pytest
@@ -20,6 +23,12 @@ from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
 import kenya_agricultural_regions_weather_etl_pipeline_spark as pkg
+from kenya_agricultural_regions_weather_etl_pipeline_spark.operators.graph_index import (
+    deployed_graph_index,
+)
+from kenya_agricultural_regions_weather_etl_pipeline_spark.streaming import (
+    micro_batch,
+)
 from kenya_agricultural_regions_weather_etl_pipeline_spark.streaming.micro_batch import (
     _quantile_picks,
     _weighted_quantile_picks,
@@ -38,6 +47,7 @@ from kenya_agricultural_regions_weather_etl_pipeline_spark.streaming.runner impo
 
 PARTS = "spark.sql.shuffle.partitions"
 AQE = "spark.sql.adaptive.enabled"
+OVERWRITE_MODE = "spark.sql.sources.partitionOverwriteMode"
 
 
 def _outer(spark):
@@ -129,6 +139,90 @@ def test_memory_sink_drain_materializes_and_drops_sink(spark, tmp_path):
     ]
 
 
+def _temp_views(spark):
+    return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+
+def test_memory_sink_drain_drops_sink_when_stream_raises(spark, tmp_path):
+    before = _temp_views(spark)
+    # batches 0 and 1 land in the sink, then batch 2 (k % 3 == 2) fails
+    failing = _arrivals(spark, tmp_path).select(
+        "k", F.assert_true(F.col("k") % 3 != 2)
+    )
+    with pytest.raises(StreamingQueryException):
+        drain(failing, mode="append")
+    assert _temp_views(spark) == before
+
+
+# every runner that drains through runner.drain inside one workdir
+_WORKDIR_RUNNERS = {
+    "st6": "run_foreach_batch_upsert",
+    "st8": "run_jsonl_ingest",
+    "st13": "run_left_outer_attribution",
+    "st14": "run_streaming_near_dedup",
+    "st15": "run_streaming_heavy_hitters",
+    "st16": "run_cdc_apply_stream",
+    "st17": "run_vector_index_ingest",
+    "st18": "run_corpus_telemetry",
+    "st19": "run_model_score_stream",
+    "st20": "run_streaming_semantic_dedup",
+    "st21": "run_knn_graph_ingest",
+    "st22": "run_vector_serve_stream",
+    "st23": "run_export_manifest_stream",
+    "st24": "run_graph_serve_stream",
+    "st25": "run_bpe_stats_stream",
+    "st26": "run_contract_stream",
+    "st27": "run_drift_stream",
+    "st28": "run_token_budget_stream",
+    "st29": "run_nb_deploy_stream",
+    "st30": "run_span_index_stream",
+    "st31": "run_quantile_stream",
+    "st32": "run_maxsim_serve_stream",
+    "st33": "run_late_data_audit",
+    "st34": "run_unseen_mass_stream",
+    "st35": "run_containment_ingest",
+    "st36": "run_weighted_quantile_stream",
+    "st37": "run_bm25_index_ingest",
+    "st38": "run_hybrid_serve_stream",
+    "st38b": "run_hybrid_serve_pruned",
+    "st39": "run_media_dedup_ingest",
+    "st40": "run_mixed_media_dedup_ingest",
+    "st41": "run_erasure_request_stream",
+    "st42": "run_index_erasure_stream",
+    "st43": "run_cell_erasure_stream",
+    "st44": "run_graph_erasure_stream",
+    "st45": "run_backfill_stream",
+    "st46": "run_decontamination_ingest",
+    "st47": "run_preference_pair_stream",
+    "st48": "run_shard_export_stream",
+}
+
+
+@pytest.mark.parametrize(
+    "runner", list(_WORKDIR_RUNNERS.values()), ids=list(_WORKDIR_RUNNERS)
+)
+def test_raising_runner_leaves_no_workdir(
+    spark, sf001, tmp_path, monkeypatch, runner
+):
+    def broken_drain(*args, **kwargs):
+        raise RuntimeError("drain failed")
+
+    # the graph index is deployed once per process and outlives every
+    # query by design (st24/st44/st45): deploy it before the swap below
+    deployed_graph_index(spark, sf001, k=5, n_probe=2)
+    scratch = tmp_path / "tmp"
+    scratch.mkdir()
+    monkeypatch.setattr(micro_batch, "drain", broken_drain)
+    monkeypatch.setattr(tempfile, "tempdir", str(scratch))
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    with pytest.raises(RuntimeError, match="drain failed"):
+        getattr(micro_batch, runner)(spark, sf001)
+    assert os.listdir(scratch) == []
+    # nor a cached frame (st24 persists two around its drain)
+    assert cache.isEmpty()
+
+
 def test_latest_version_picks_highest_numeric_version(spark, tmp_path):
     for d in ("v0", "v2", "v10", "v_init", "_SUCCESS"):
         os.makedirs(tmp_path / d)
@@ -161,9 +255,9 @@ def _bucket_store(spark, tmp_path):
     spark.createDataFrame(
         [(5.0, 1, 1, 1), (7.0, 1, 2, 1)],
         "value double, w long, l_orderkey long, l_linenumber long",
-    ).withColumn("bucket", F.lit(0).cast("long")).withColumn(
-        "batch_id", F.lit(0)
-    ).write.partitionBy("bucket", "batch_id").parquet(store)
+    ).withColumn("bucket", F.lit(0).cast("long")).write.partitionBy(
+        "bucket"
+    ).parquet(os.path.join(store, "batch_id=0"))
     return store
 
 
@@ -195,19 +289,30 @@ def test_quantile_drain_names_what_disagrees(spark, tmp_path):
 # ---- structural guard: the lifecycle skeleton lives in runner.py ------
 
 _CONF_KEYS = {PARTS, AQE}
-# st10/st11 poll a processingTime stream until their source's backlog
-# is consumed, so they start their own query on a local_checkpoint
 _ALLOWED = {
+    # st10/st11 poll a processingTime stream until their source's
+    # backlog is consumed, so they start their own query on a
+    # local_checkpoint
     ("micro_batch.py", "run_weather_stream", "checkpointLocation"),
     ("micro_batch.py", "run_weather_stream_etl", "checkpointLocation"),
+    # st11 and st12 return a lazy read of their target, so its directory
+    # must outlive the call; every other runner owns one
+    # TemporaryDirectory
+    ("micro_batch.py", "run_weather_stream_etl", "mkdtemp"),
+    ("micro_batch.py", "run_dedup_ingest", "mkdtemp"),
+    # st47 replaces only the cohorts a batch touched: its slot is a set
+    # of partitions, not one batch directory. Every other batch-keyed
+    # store overwrites its own <store>/<key>=<batch_id> path
+    ("micro_batch.py", "run_preference_pair_stream", OVERWRITE_MODE),
 }
 
 
 def _skeleton_hits(path):
     """(top-level def, kind) for every skeleton element in a module:
     a write of the shuffle-partition or AQE conf (the key used anywhere
-    but as a ``.get`` argument), an ``availableNow`` trigger, and a
-    ``checkpointLocation`` option."""
+    but as a ``.get`` argument), an ``availableNow`` trigger, a
+    ``checkpointLocation`` option, a ``mkdtemp`` call and the
+    partition-overwrite-mode conf key."""
     tree = ast.parse(open(path).read())
     hits = []
     for top in tree.body:
@@ -224,8 +329,13 @@ def _skeleton_hits(path):
             if isinstance(n, ast.Constant) and n.value in _CONF_KEYS:
                 if id(n) not in reads:
                     hits.append((owner, n.value))
-            elif isinstance(n, ast.Constant) and n.value == "checkpointLocation":
-                hits.append((owner, "checkpointLocation"))
+            elif isinstance(n, ast.Constant) and n.value in (
+                "checkpointLocation",
+                OVERWRITE_MODE,
+            ):
+                hits.append((owner, n.value))
+            elif isinstance(n, ast.Attribute) and n.attr == "mkdtemp":
+                hits.append((owner, "mkdtemp"))
             elif isinstance(n, ast.keyword) and n.arg == "availableNow":
                 hits.append((owner, "availableNow"))
     return hits
